@@ -20,7 +20,7 @@ Chaudhuri et al., ICDE'06):
   kernel (the same radix-sort intersection counter the LSH verify stage
   uses) — jaccard = |A∩B| / (|A|+|B|-|A∩B|), candidate-bounded work.
 
-Scale notes: two shuffles (index self-join on the prefix hash, then the
+Scale notes: two shuffles (`lsh.bucket_pairs` over the prefix hash, then the
 signature join for verification — AQE may broadcast the pair side). Postings
 of a single hash are tiny for content shingles (a 21-byte gram shared by g
 documents contributes g^2/2 candidate rows); the LSH path with bucket caps
@@ -39,6 +39,7 @@ from pyspark.sql import types as T
 
 from ..kernels import i64_to_u64_shifted
 from ..kernels.distance import raw_distance_many
+from .lsh import bucket_pairs
 
 
 def _intersections_schema(key_type: T.DataType) -> T.StructType:
@@ -82,27 +83,8 @@ def prefix_candidates(
     index = sized.select(
         "k", F.explode(F.slice("hashes", F.lit(1), prefix_len)).alias("h")
     )
-    # in-group expansion over one shuffle of the inverted index — the alias
-    # self-join form re-computed the whole index subtree under AQE's
-    # broadcast conversion (see operators/lsh.py). Posting-list state is
-    # O(g) per hash while the expansion output is O(g²) in either design
-    # (the docstring's posting-list smallness argument is unchanged).
-    return (
-        index.groupBy("h")
-        .agg(F.sort_array(F.collect_list("k")).alias("ks"))
-        .filter(F.size("ks") > 1)
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ks, (x, i) -> "
-                    "transform(slice(ks, i + 2, size(ks)), y -> "
-                    "struct(x as key_a, y as key_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.key_a", "p.key_b")
-        .distinct()
-    )
+    pairs, _ = bucket_pairs(index, ("h",), "k")
+    return pairs
 
 
 def intersection_counts(

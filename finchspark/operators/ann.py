@@ -20,6 +20,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
 from ..kernels import murmur3_x64_128_low64
+from .lsh import bucket_pairs
 
 
 def _dot(a: str, b: str):
@@ -175,27 +176,24 @@ def cosine_topk_lsh(
     exactly reranked. Output schema matches `cosine_topk` (rank may be
     < k when buckets recall fewer neighbors).
 
-    Candidates come from IN-GROUP expansion over one (table, bucket)
-    shuffle of the bucketize output — the earlier query×ref equi-join ran
-    the bucketize MapInArrow subtree TWICE (AQE broadcast conversion
-    duplicates the build side, see operators/lsh.py) and added a broadcast
-    stage. Per-bucket member-list state is O(bucket); the expansion output
-    (queries_in_bucket × bucket) is the binding cost in either design and
-    is controlled by `n_bits` exactly as before."""
+    Candidates come from one (table, bucket) shuffle of the bucketize
+    output, expanded per query: one row per query holding its bucket's
+    other members, so no row holds more than O(bucket) items. The output
+    (queries_in_bucket × bucket) is controlled by `n_bits`."""
     tagged = _bucketize(embeddings, n_bits, n_tables, key, vec, seed)
     cand = (
         tagged.groupBy("table_id", "bucket")
         .agg(F.collect_list(key).alias("ks"))
         .select(
-            F.explode(
-                F.expr(
-                    f"flatten(transform(filter(ks, q -> q % {int(query_mod)} = 0),"
-                    " q -> transform(filter(ks, n -> n != q),"
-                    " n -> struct(q as query_id, n as neighbor_id))))"
-                )
-            ).alias("p")
+            "ks",
+            F.explode(F.expr(f"filter(ks, q -> q % {int(query_mod)} = 0)")).alias(
+                "query_id"
+            ),
         )
-        .select("p.query_id", "p.neighbor_id")
+        .select(
+            "query_id",
+            F.explode(F.expr("filter(ks, n -> n != query_id)")).alias("neighbor_id"),
+        )
         .distinct()
     )
     qv = embeddings.select(F.col(key).alias("query_id"), F.col(vec).alias("qv"))
@@ -234,38 +232,14 @@ def cosine_dup_pairs(
     top-k search form above).
 
     Scale shape mirrors the MinHash LSH stage: sign-LSH buckets per table,
-    ONE shuffle per candidate stage (window count over the join partitioning
-    sizes each (table, bucket) in the same exchange the alias self-join
-    reuses), mega-buckets capped at `bucket_cap`, exact rerank only on
-    candidates, never the n^2 cross product. Defaults (3 bits, 32 tables)
-    make a missed pair at cosine 0.45 ~1e-4 likely per pair and measured
-    recall 1.0 on the driver data — tune bits up for higher thresholds.
+    candidates from `lsh.bucket_pairs` (one shuffle, mega-buckets capped at
+    `bucket_cap`), exact rerank only on candidates, never the n^2 cross
+    product. Defaults (3 bits, 32 tables) make a missed pair at cosine 0.45
+    ~1e-4 likely per pair and measured recall 1.0 on the `cosine_dup_pairs`
+    query's embeddings — tune bits up for higher thresholds.
     """
     tagged = _bucketize(embeddings, n_bits, n_tables, key, vec, seed)
-    w = Window.partitionBy("table_id", "bucket")
-    sized = tagged.withColumn("bucket_size", F.count(F.lit(1)).over(w))
-    member = sized.filter(
-        (F.col("bucket_size") > 1) & (F.col("bucket_size") <= bucket_cap)
-    ).select("table_id", "bucket", key)
-    # in-group expansion on the window's own partitioning — one exchange,
-    # no self-join (the alias-join form re-computed the whole bucketize
-    # subtree under AQE broadcast conversion, see operators/lsh.py); group
-    # state is bounded by bucket_cap via the window-count filter above
-    cand = (
-        member.groupBy("table_id", "bucket")
-        .agg(F.sort_array(F.collect_list(key)).alias("ks"))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ks, (x, i) -> "
-                    "transform(slice(ks, i + 2, size(ks)), y -> "
-                    "struct(x as key_a, y as key_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.key_a", "p.key_b")
-        .distinct()
-    )
+    cand, _ = bucket_pairs(tagged, ("table_id", "bucket"), key, cap=bucket_cap)
     av = embeddings.select(F.col(key).alias("key_a"), F.col(vec).alias("qv"))
     bv = embeddings.select(F.col(key).alias("key_b"), F.col(vec).alias("rv"))
     return (

@@ -17,50 +17,24 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.window import Window
 
+from .lsh import bucket_pairs
+
 
 def exact_dup_pairs(
     docs: DataFrame,
     key: str = "doc_id",
     text: str = "text",
-    max_group: int | None = None,
 ) -> DataFrame:
-    """All (key_a < key_b) pairs with byte-identical text.
+    """All (key_a < key_b) pairs with byte-identical text, from
+    `lsh.bucket_pairs` over content-hash buckets: one shuffle, no self-join.
 
-    Pair semantics make the OUTPUT inherently O(g²) per duplicate group, but
-    the plan is a single shuffle (groupBy on the content hash + in-group
-    expansion with array HOFs) — no self-join, so no O(g²) join-probe rows
-    and per-group state bounded by the member list. For clustering use the
-    star-edge forms (`exact_dup_clusters` / `lsh.exact_dup_pairs_sha`)
-    instead — linear output, same components. `max_group` caps the quadratic
-    expansion: groups larger than it emit star edges (min-key → member)
-    only, which preserves connectivity but not pair completeness.
+    The output is inherently O(g²) per duplicate group. For clustering use
+    the star-edge forms (`exact_dup_clusters` / `lsh.exact_dup_pairs_sha`)
+    instead — linear output, same components.
     """
-    members = (
-        docs.select(F.sha2(F.col(text), 256).alias("h"), F.col(key))
-        .groupBy("h")
-        .agg(F.sort_array(F.collect_list(key)).alias("ks"))
-        .filter(F.size("ks") > 1)
-    )
-    # (element, index) two-arg lambda: pair each member with every LATER one
-    all_pairs_expr = F.explode(
-        F.expr(
-            "flatten(transform(ks, (x, i) -> "
-            "transform(slice(ks, i + 2, size(ks)), y -> "
-            "struct(x as key_a, y as key_b))))"
-        )
-    ).alias("p")
-    if max_group is None:
-        return members.select(all_pairs_expr).select("p.key_a", "p.key_b")
-    small = members.filter(F.size("ks") <= max_group).select(all_pairs_expr)
-    big = members.filter(F.size("ks") > max_group).select(
-        F.explode(
-            F.expr(
-                "transform(slice(ks, 2, size(ks)), y -> "
-                "struct(ks[0] as key_a, y as key_b))"
-            )
-        ).alias("p")
-    )
-    return small.unionByName(big).select("p.key_a", "p.key_b")
+    hashed = docs.select(F.sha2(F.col(text), 256).alias("h"), F.col(key))
+    pairs, _ = bucket_pairs(hashed, ("h",), key)
+    return pairs
 
 
 def exact_dup_clusters(docs: DataFrame, key: str = "doc_id", text: str = "text") -> DataFrame:
@@ -105,7 +79,9 @@ def ngram_jaccard_pairs(
     each other (bounded exact comparison; LSH is the scale path).
 
     Output: (key_a, key_b, jaccard, containment) — containment of A's grams
-    in B, i.e. |A ∩ B| / |A|.
+    in B, i.e. |A ∩ B| / |A|. `key` must be an integer column: the banded
+    equi-join generates each doc's partner keys as
+    `sequence(k + 1, k + key_band)`.
     """
     if key_band < 1:
         # sequence(k+1, k+key_band) with key_band < 1 is DESCENDING (the

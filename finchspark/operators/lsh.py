@@ -1,4 +1,4 @@
-"""LSH candidate generation: band explode → capped buckets → self-join.
+"""LSH candidate generation: band explode → capped buckets → bucket pairs.
 
 New design, no reference counterpart (SURVEY.md §2.7, §7.3): the reference
 compares all pairs in a nested loop (`calc_sketch_distances`,
@@ -12,21 +12,9 @@ Skew handling (north_rule):
   surfaced in the metrics DataFrame instead (exact duplicates among them are
   still caught by the exact sha256 dedup operator, and the cap only kicks in
   for buckets whose members are near-identical to >cap partners anyway);
-- bucket sizes come from a WINDOW count over the bucket partitioning, so
-  the whole candidate stage shuffles the exploded bands exactly ONCE on
-  (band_id, band_hash); pairs are then expanded IN-GROUP (collect_list of
-  the cap-bounded member set + array pair expansion) instead of a
-  self-join. The earlier alias self-join relied on `ReusedExchange` to
-  share the one shuffle between its two sides — true under static
-  planning, but AQE's broadcast conversion DUPLICATES the whole build-side
-  subtree (explode + exchange + sort + window computed twice, measured in
-  round 7: the candidate stage alone was 2.3 s of a 2.4 s LSH+verify
-  stage at sf0.1). The in-group expansion has one side by construction:
-  nothing to re-plan, no broadcast, no join probes. Group state is bounded
-  by `bucket_cap` because the window count filters mega-buckets BEFORE any
-  member list materializes; the expansion's O(s²) output — identical to
-  the join's probe output — remains the binding cost in either design.
-  Remaining shuffle: the final pair distinct.
+- pairs come from `bucket_pairs`, which shuffles the exploded bands once
+  on (band_id, band_hash) and expands each bucket in-group (see its
+  docstring for why the shape is not a self-join).
 """
 from __future__ import annotations
 
@@ -44,6 +32,67 @@ def explode_bands(signatures: DataFrame, key_col: str = "doc_id") -> DataFrame:
     )
 
 
+def bucket_pairs(
+    df: DataFrame,
+    bucket_cols: tuple[str, ...],
+    key: str,
+    *,
+    cap: int | None = None,
+    payload: tuple[str, ...] = (),
+) -> tuple[DataFrame, DataFrame | None]:
+    """All (key_a < key_b) pairs of rows of `df` that share a bucket.
+
+    Returns (pairs, overflow). pairs: distinct (key_a, key_b[, p_a, p_b for
+    each payload column p]), key_a < key_b strictly, so a key repeated in a
+    bucket never pairs with itself and NULL keys never pair. overflow:
+    (bucket_cols..., bucket_size) of the buckets larger than `cap`, dropped
+    from pair generation; None when `cap` is None.
+
+    Shape: one window count sizes each bucket over the bucket partitioning,
+    and the member lists are collected by a groupBy on those same columns,
+    so the exploded buckets are shuffled exactly once. The cap filters a
+    mega-bucket out before any member list materializes. Pairs are expanded
+    in-group, not by a self-join of the bucket frame: under AQE, broadcast
+    conversion re-plans a self-join's build side, computing its whole
+    subtree (explode, exchange, window) a second time. The expansion is per
+    member: one row per member holding the later members of its sorted
+    list, so no row holds more than O(g) items for a bucket of g members
+    (the output stays O(g²) rows, as a join's probe output would be).
+    """
+    w = Window.partitionBy(*bucket_cols)
+    sized = df.withColumn("bucket_size", F.count(F.lit(1)).over(w))
+    overflow = None
+    if cap is not None:
+        overflow = (
+            sized.filter(F.col("bucket_size") > cap)
+            .select(*bucket_cols, "bucket_size")
+            .distinct()
+        )
+        sized = sized.filter(F.col("bucket_size") <= cap)
+    members = (
+        sized.filter(F.col("bucket_size") > 1)
+        .groupBy(*bucket_cols)
+        .agg(
+            F.sort_array(
+                F.collect_list(F.struct(F.col(key).alias("k"), *payload))
+            ).alias("ms")
+        )
+    )
+    carried = [
+        F.col(f"{side}.{p}").alias(f"{p}_{suffix}")
+        for p in payload
+        for side, suffix in (("x", "a"), ("y", "b"))
+    ]
+    pairs = (
+        members.select("ms", F.posexplode("ms").alias("i", "x"))
+        .select("x", F.explode(F.expr("slice(ms, i + 2, size(ms))")).alias("y"))
+        .filter(F.col("y.k") > F.col("x.k"))
+        .select(F.col("x.k").alias("key_a"), F.col("y.k").alias("key_b"), *carried)
+        .distinct()
+    )
+    return pairs, overflow
+
+
 def candidate_pairs(
     signatures: DataFrame,
     lsh: LshConfig,
@@ -55,41 +104,12 @@ def candidate_pairs(
     bucket_metrics: per-(band_id, band_hash) member counts for buckets that
     exceeded the cap (skew observability + lineage).
     """
-    bands = explode_bands(signatures, key_col)
-    # ONE shuffle on the bucket key: the window count replaces the separate
-    # size aggregation + join-back (which recomputed the band explode per
-    # join side at scale)
-    w = Window.partitionBy("band_id", "band_hash")
-    sized = bands.withColumn("bucket_size", F.count(F.lit(1)).over(w))
-    overflow = (
-        sized.filter(F.col("bucket_size") > lsh.bucket_cap)
-        .select("band_id", "band_hash", "bucket_size")
-        .distinct()
+    return bucket_pairs(
+        explode_bands(signatures, key_col),
+        ("band_id", "band_hash"),
+        key_col,
+        cap=lsh.bucket_cap,
     )
-    member = sized.filter(
-        (F.col("bucket_size") > 1) & (F.col("bucket_size") <= lsh.bucket_cap)
-    ).select("band_id", "band_hash", F.col(key_col).alias("k"))
-    # in-group expansion: the groupBy keys match the window's partitioning,
-    # so the member lists aggregate WITHOUT a new exchange, and the (x, i)
-    # two-arg lambda pairs each member with every later one in sorted order
-    # (key_a < key_b, exactly the old join condition). collect_list drops
-    # NULL keys like the old join's null-rejecting condition did.
-    pairs = (
-        member.groupBy("band_id", "band_hash")
-        .agg(F.sort_array(F.collect_list("k")).alias("ks"))
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ks, (x, i) -> "
-                    "transform(slice(ks, i + 2, size(ks)), y -> "
-                    "struct(x as key_a, y as key_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.key_a", "p.key_b")
-        .distinct()
-    )
-    return pairs, overflow
 
 
 def candidate_pairs_incremental(

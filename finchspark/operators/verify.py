@@ -56,7 +56,6 @@ def verify_pairs(
     config: PipelineConfig,
     key_col: str = "doc_id",
     assume_complete: bool = False,
-    sha_short_circuit: bool = False,
 ) -> DataFrame:
     """pairs(key_a, key_b) × signatures → verified distances DataFrame with
     (key_a, key_b, containment, jaccard, mash_distance, common_hashes,
@@ -71,26 +70,6 @@ def verify_pairs(
     set quantities instead: total = |A ∪ B|, jaccard = |A∩B|/|A∪B|,
     containment = |A∩B|/|B| (the whole reference side is consumed). These
     are exactly the quantities a SQL oracle over the shingle sets computes.
-
-    `sha_short_circuit` (opt-in; requires a `sha256` signature column and a
-    bottom-k sketch): byte-identical content has byte-identical sketches,
-    so a pair with equal shas is provably (containment=1, jaccard=1,
-    common=total=|sketch|, mash=0) in BOTH verify modes — identical pairs
-    are split off after two slim (key, sha, |sketch|) joins and emitted
-    from codegen literals; only genuinely-different pairs ship hash arrays
-    through the join and the kernel. MEASURED TRADEOFF (BENCH machine, 150k
-    files / 59k candidates): the two extra exchanges cost MORE than the
-    array traffic they save — 16.8 s vs 2.8 s — because at that size the
-    stage is exchange-count-bound, not byte-bound. Back of envelope: it
-    saves dup_frac × |pairs| × sketch_bytes (~1.2 KB at k=128) of join
-    traffic for ~180 B/pair of slim-join traffic, so it pays off only when
-    shuffle BYTES are the binding constraint (multi-TB candidate sets) and
-    the exact-dup fraction is ≳15%. The structurally better answer for
-    exact-dup-heavy corpora is to collapse sha-identical docs to one
-    representative BEFORE LSH (see `lsh.exact_dup_pairs_sha` + star
-    expansion) — this flag exists for pipelines that must keep per-pair
-    outputs for every member. Default off. Scaled sketches always keep the
-    kernel path (their tail rule is not a pure set identity).
     """
     scale = (
         config.sketch.scale if config.sketch.sketch_type == "scaled" else 0.0
@@ -99,55 +78,6 @@ def verify_pairs(
     sigs = signatures.select(key_col, "hashes")
     key_type = pairs.schema["key_a"].dataType
     out_schema = _verify_schema(key_type)
-
-    identical = None
-    if (
-        sha_short_circuit
-        and scale == 0.0
-        and "sha256" in signatures.columns
-    ):
-        slim = signatures.select(
-            key_col,
-            F.col("sha256").alias("__sha"),
-            F.size("hashes").cast("long").alias("__n"),
-        )
-        tagged = (
-            pairs.select("key_a", "key_b")
-            .join(
-                slim.select(
-                    F.col(key_col).alias("key_a"),
-                    F.col("__sha").alias("__sha_a"),
-                    F.col("__n").alias("__n_a"),
-                ),
-                "key_a",
-            )
-            .join(
-                slim.select(
-                    F.col(key_col).alias("key_b"),
-                    F.col("__sha").alias("__sha_b"),
-                ),
-                "key_b",
-            )
-        )
-        # isNotNull conjunctions keep `same` two-valued: a NULL sha on either
-        # side (possible for externally built signature frames) must route the
-        # pair to the kernel branch, not evaluate to NULL and silently drop it
-        # from BOTH branches (FALSE AND NULL = FALSE, so `same` is never NULL).
-        same = (
-            F.col("__sha_a").isNotNull()
-            & F.col("__sha_b").isNotNull()
-            & (F.col("__sha_a") == F.col("__sha_b"))
-            & (F.col("__n_a") > 0)
-        )
-        identical = tagged.filter(same).select(
-            "key_a",
-            "key_b",
-            F.lit(1.0).alias("containment"),
-            F.lit(1.0).alias("jaccard"),
-            F.col("__n_a").alias("common_hashes"),
-            F.col("__n_a").alias("total_hashes"),
-        )
-        pairs = tagged.filter(~same).select("key_a", "key_b")
 
     joined = (
         pairs.join(
@@ -195,8 +125,6 @@ def verify_pairs(
             )
 
     verified = joined.mapInArrow(compute, out_schema)
-    if identical is not None:
-        verified = verified.unionByName(identical)
     # column expression (whole-stage codegen): mash distance + clamp
     mash = -F.log((2.0 * F.col("jaccard")) / (1.0 + F.col("jaccard"))) / F.lit(k)
     mash = F.when(F.col("jaccard") <= 0.0, F.lit(1.0)).otherwise(

@@ -1,10 +1,11 @@
 """End-to-end near-duplicate pipeline: documents → signatures → candidates →
 verified pairs → components.
 
-Spark shape (SURVEY.md §3.2): one embarrassingly-parallel signature pass, a
-banding self-join for candidates, an Arrow verify kernel, then O(log n)
-large-star/small-star rounds. With a `TableStore` every stage checkpoints and
-a re-run resumes from the last completed stage (params-hash validated).
+Spark shape (SURVEY.md §3.2): one embarrassingly-parallel signature pass,
+banded in-group pair expansion for candidates, an Arrow verify kernel, then
+O(log n) large-star/small-star rounds. With a `TableStore` every stage
+checkpoints and a re-run resumes from the last completed stage (params-hash
+validated).
 
 Short documents (fewer than `short_doc_min_kmers` shingles) have unstable
 MinHash signatures; they take the SimHash path: banded 16-bit chunks of the
@@ -18,11 +19,10 @@ from dataclasses import dataclass
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-from pyspark.sql.window import Window
 
 from ..config import PipelineConfig
 from ..operators.cc import connected_components
-from ..operators.lsh import candidate_pairs, exact_dup_pairs_sha
+from ..operators.lsh import bucket_pairs, candidate_pairs, exact_dup_pairs_sha
 from ..operators.signature import build_signatures
 from ..operators.verify import verify_pairs
 from .checkpoint import TableStore
@@ -46,9 +46,8 @@ def simhash_candidate_pairs(
     Hamming distance < 4 shares one of the four 16-bit chunks; verified
     exactly with bit_count (JVM-side, whole-stage codegen).
 
-    Same skew discipline as the MinHash LSH stage (`operators/lsh.py`): a
-    window count over the join partitioning sizes each (chunk_id, chunk_val)
-    bucket in the SAME single shuffle the self-join needs; buckets above
+    Pairs come from `lsh.bucket_pairs` over (chunk_id, chunk_val) buckets,
+    with the MinHash LSH stage's skew discipline: buckets above
     `config.lsh.bucket_cap` are dropped from pair generation and surfaced as
     metrics — at 10^8 short docs a popular 16-bit chunk value would
     otherwise emit ~n²/2¹⁶ candidate rows before the Hamming filter. Near
@@ -70,43 +69,15 @@ def simhash_candidate_pairs(
             )
         ).alias("chunk_id", "chunk_val"),
     )
-    w = Window.partitionBy("chunk_id", "chunk_val")
-    sized = chunks.withColumn("bucket_size", F.count(F.lit(1)).over(w))
-    overflow = (
-        sized.filter(F.col("bucket_size") > config.lsh.bucket_cap)
-        .select("chunk_id", "chunk_val", "bucket_size")
-        .distinct()
-    )
-    member = sized.filter(
-        (F.col("bucket_size") > 1) & (F.col("bucket_size") <= config.lsh.bucket_cap)
-    ).select("chunk_id", "chunk_val", key_col, "simhash")
-    # in-group pair expansion on the window's own partitioning (no second
-    # exchange, no self-join — the alias-join form re-computed its whole
-    # subtree under AQE's broadcast conversion, see operators/lsh.py):
-    # members sort by (key, simhash) struct order == key order (keys are
-    # unique), so x < y pairs reproduce the old a.key < b.key condition
-    pairs = (
-        member.groupBy("chunk_id", "chunk_val")
-        .agg(
-            F.sort_array(
-                F.collect_list(F.struct(F.col(key_col).alias("k"), "simhash"))
-            ).alias("ms")
-        )
-        .select(
-            F.explode(
-                F.expr(
-                    "flatten(transform(ms, (x, i) -> "
-                    "transform(slice(ms, i + 2, size(ms)), y -> "
-                    "struct(x.k as key_a, y.k as key_b, "
-                    "x.simhash as sim_a, y.simhash as sim_b))))"
-                )
-            ).alias("p")
-        )
-        .select("p.key_a", "p.key_b", "p.sim_a", "p.sim_b")
-        .distinct()
+    pairs, overflow = bucket_pairs(
+        chunks,
+        ("chunk_id", "chunk_val"),
+        key_col,
+        cap=config.lsh.bucket_cap,
+        payload=("simhash",),
     )
     pairs = pairs.filter(
-        F.bit_count(F.col("sim_a").bitwiseXOR(F.col("sim_b")))
+        F.bit_count(F.col("simhash_a").bitwiseXOR(F.col("simhash_b")))
         <= config.simhash_max_hamming
     ).select("key_a", "key_b")
     return (pairs, overflow) if with_metrics else pairs

@@ -306,7 +306,7 @@ def test_winnow_fingerprints_guarantee_and_scalar_parity(spark):
 
 def test_exact_dup_pairs_group_expansion(spark):
     """Single-shuffle in-group expansion: all C(g,2) ordered pairs per
-    identical-text group, no self-join; max_group falls back to star edges."""
+    identical-text group, no self-join."""
     from itertools import combinations
 
     from finchspark.operators.dedup import exact_dup_pairs
@@ -323,12 +323,6 @@ def test_exact_dup_pairs_group_expansion(spark):
     # plan shape: no SortMergeJoin/BroadcastHashJoin — expansion is join-free
     plan = exact_dup_pairs(docs)._jdf.queryExecution().executedPlan().toString()
     assert "Join" not in plan
-    # capped: big group degrades to star edges from the min key
-    capped = {
-        (r["key_a"], r["key_b"])
-        for r in exact_dup_pairs(docs, max_group=3).collect()
-    }
-    assert capped == {(1, 3), (1, 5), (1, 7), (10, 11)}
 
 
 def test_cosine_dup_pairs_vs_brute_force(spark):

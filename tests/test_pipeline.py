@@ -148,6 +148,34 @@ def test_simhash_chunk_bucket_cap(spark, cfg):
     assert (1, 3) in got_full  # hamming 3 via the shared chunk0
 
 
+def test_mega_bucket_capped_and_clustered_by_sha(spark, cfg):
+    """2,500 byte-identical documents fill every LSH band bucket past the
+    default cap of 2000: the buckets are reported as overflow, the sha256
+    path still puts all 2,500 in one component, and no pair is a
+    self-pair."""
+    rng = np.random.default_rng(11)
+
+    def text():
+        return "".join(rng.choice(list("abcdefghij ;{}()"), size=600))
+
+    same = text()
+    near = text()
+    rows = [(i, same) for i in range(2500)]
+    rows += [(5000 + i, text()) for i in range(3)]
+    rows += [(6000, near), (6001, near[:300] + "X" + near[301:])]
+    docs = spark.createDataFrame(rows, "doc_id long, content string")
+    res = near_duplicates(docs, cfg, key_col="doc_id")
+
+    overflow = res.bucket_overflow.collect()
+    assert {r["band_id"] for r in overflow} == set(range(cfg.lsh.n_bands))
+    assert {r["bucket_size"] for r in overflow} == {2500}
+    comp = {r["node"]: r["component"] for r in res.components.collect()}
+    assert {comp[i] for i in range(2500)} == {0}
+    pairs = [(r["key_a"], r["key_b"]) for r in res.pairs.collect()]
+    assert all(a < b for a, b in pairs)
+    assert (6000, 6001) in pairs
+
+
 def test_tablestore_format_pluggable(spark, tmp_path):
     """The stage store works over any Spark DataSource format — ORC here as
     the second real format (the Iceberg path swaps write/read only)."""
@@ -160,38 +188,6 @@ def test_tablestore_format_pluggable(spark, tmp_path):
     assert got == {(1, "a"), (2, "b")}
     assert store.read_meta("stage1")["row_count"] == 2
     assert store.exists("stage1")
-
-
-def test_verify_sha_short_circuit_identical_output(spark, documents_df, cfg):
-    """The sha short-circuit path must be row-identical to the kernel path
-    (the planted corpus has exact-dup pairs, so both branches are
-    exercised), and exact-dup pairs must report the provable literals."""
-    from finchspark.operators.lsh import candidate_pairs
-    from finchspark.operators.signature import build_signatures
-    from finchspark.operators.verify import verify_pairs
-
-    sigs = build_signatures(
-        documents_df, cfg, key_cols=("doc_id",), content_col="content"
-    ).persist()
-    cands, _ = candidate_pairs(sigs, cfg.lsh, key_col="doc_id")
-    cands = cands.persist()
-
-    def rows(sc):
-        out = verify_pairs(cands, sigs, cfg, key_col="doc_id", sha_short_circuit=sc)
-        return sorted(
-            (r["key_a"], r["key_b"], round(r["containment"], 12),
-             round(r["jaccard"], 12), r["common_hashes"], r["total_hashes"],
-             round(r["mash_distance"], 12))
-            for r in out.collect()
-        )
-
-    fast, slow = rows(True), rows(False)
-    assert fast == slow
-    # at least one exact-dup candidate pair exists and reports the literals
-    exact = [r for r in fast if r[3] == 1.0]
-    assert exact and all(r[2] == 1.0 and r[4] == r[5] and r[6] == 0.0 for r in exact)
-    cands.unpersist()
-    sigs.unpersist()
 
 
 def test_collapse_exact_same_components(spark, documents_df, cfg, result):
@@ -252,32 +248,6 @@ def test_collapse_exact_null_content_not_dropped(spark, cfg):
     assert comp_d["n1"] == comp_d["n2"] == comp_d["e1"]
     # exactly one representative signature exists for the null/empty group
     assert res.signatures.count() == 2  # {null/empty group rep, x1}
-
-
-def test_verify_null_sha_routes_to_kernel(spark, documents_df, cfg):
-    """ADVICE r3: with sha_short_circuit=True, a NULL sha256 on either side
-    made `same` NULL so the pair failed BOTH branch filters and was silently
-    dropped. Null-sha pairs must take the kernel branch instead."""
-    from finchspark.operators.lsh import candidate_pairs
-    from finchspark.operators.signature import build_signatures
-    from finchspark.operators.verify import verify_pairs
-
-    sigs = build_signatures(
-        documents_df, cfg, key_cols=("doc_id",), content_col="content"
-    ).withColumn("sha256", F.lit(None).cast("string")).persist()
-    cands, _ = candidate_pairs(sigs, cfg.lsh, key_col="doc_id")
-    cands = cands.persist()
-    fast = verify_pairs(cands, sigs, cfg, key_col="doc_id", sha_short_circuit=True)
-    slow = verify_pairs(cands, sigs, cfg, key_col="doc_id", sha_short_circuit=False)
-
-    def rows(df):
-        return sorted(
-            (r["key_a"], r["key_b"], round(r["jaccard"], 12)) for r in df.collect()
-        )
-
-    assert rows(fast) == rows(slow) and len(rows(fast)) > 0
-    cands.unpersist()
-    sigs.unpersist()
 
 
 def test_tablestore_append_lineage_per_write(spark, cfg, tmp_path):
