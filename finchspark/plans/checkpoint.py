@@ -8,9 +8,9 @@ an Iceberg catalog — `df.writeTo(...).append()` — without touching pipeline
 code; this sandbox has no Iceberg runtime jars).
 
 Every stage directory carries a `_finch_meta.json` with (run_id, stage,
-params_hash, row_count). Resume REQUIRES the params_hash to match — a
-mismatch hard-fails, mirroring the reference's sketch-compatibility check
-(`SketchParams::check_compatibility`, `sketch_schemes/mod.rs:179-212`),
+params_hash, row_count, count_source). Resume REQUIRES the params_hash to
+match — a mismatch hard-fails, mirroring the reference's sketch-compatibility
+check (`SketchParams::check_compatibility`, `sketch_schemes/mod.rs:179-212`),
 instead of silently mixing sketches from different configs.
 """
 from __future__ import annotations
@@ -106,17 +106,18 @@ class TableStore:
         # is exact — and a per-append full-table scan is O(store) per epoch
         # on a streaming store (the count was the single largest fixed cost
         # of a streaming epoch as the store grows). Fall back to a real
-        # count only for a table this store has no meta for.
+        # count only for a table this store has no meta for. `count_source`
+        # says which: a folded count drifts if an append bypassed this
+        # method; the next overwrite (e.g. a compaction) counts it afresh.
+        meta_file = path / "_finch_meta.json"
+        count_source = "counted"
         if mode != "append":
             n = n_this_write
+        elif meta_file.exists():
+            n = json.loads(meta_file.read_text()).get("row_count", 0) + n_this_write
+            count_source = "folded"
         else:
-            meta_file = path / "_finch_meta.json"
-            if meta_file.exists():
-                n = json.loads(meta_file.read_text()).get(
-                    "row_count", 0
-                ) + n_this_write
-            else:
-                n = self._read_raw(stage).count()
+            n = self._read_raw(stage).count()
         n_parts = max(len(per_part), 1)
         mean = n_this_write / n_parts
         meta = {
@@ -124,6 +125,7 @@ class TableStore:
             "stage": stage,
             "params_hash": self.params_hash,
             "row_count": n,
+            "count_source": count_source,
             "write_id": write_id,
             "write_row_count": n_this_write,
             "n_partitions": len(per_part),
@@ -138,7 +140,7 @@ class TableStore:
         if len(per_part) <= self._MAX_PARTITION_MAP:
             meta["partition_rows"] = {str(k): v for k, v in sorted(per_part.items())}
         path.mkdir(parents=True, exist_ok=True)
-        (path / "_finch_meta.json").write_text(json.dumps(meta, indent=1))
+        meta_file.write_text(json.dumps(meta, indent=1))
         return out
 
     # storage backend hooks — subclasses swap ONLY these two (the lineage

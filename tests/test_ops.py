@@ -1,5 +1,5 @@
 """Operator-level tests: ANN recall, Spark-native merge vs kernel merge,
-multimodal plumbing, finch-like API surface."""
+finch-like API surface."""
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -57,127 +57,6 @@ def test_merge_signatures_by_matches_kernel(spark, documents_df):
         assert np.array_equal(got_h, h), grp
         assert got["counts"] == c.tolist()
         assert got["n_members"] == len(sketches)
-
-
-def test_multimodal_features(spark):
-    from finchspark.operators.multimodal import extract_media_features
-
-    rows = [
-        (1, bytearray(b"\x89PNG\r\n\x1a\n" + b"\x00" * 64)),
-        (2, bytearray(b"\xff\xd8\xff\xe0" + bytes(range(256)))),
-        (3, bytearray(b"")),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    out = {r["doc_id"]: r["meta"] for r in extract_media_features(df).collect()}
-    assert out[1]["media_type"] == "png"
-    assert out[2]["media_type"] == "jpeg"
-    assert out[2]["n_bytes"] == 260
-    assert out[3]["media_type"] == "unknown"
-    assert out[2]["byte_entropy"] > out[1]["byte_entropy"]
-    import hashlib
-
-    assert out[3]["sha256"] == hashlib.sha256(b"").hexdigest()
-
-
-def test_decode_image_png_jpeg_gif_real_webp_stubbed():
-    import numpy as np
-
-    from finchspark.kernels.jpeg import encode_jpeg
-    from finchspark.kernels.png import encode_png
-    from finchspark.operators.multimodal import decode_image
-
-    rng = np.random.default_rng(11)
-    img = rng.integers(0, 256, size=(6, 9, 3), dtype=np.uint8)
-    for ft in range(5):  # every PNG scanline filter reconstructs exactly
-        out = decode_image(encode_png(img, filter_type=ft))
-        assert out.shape == (6, 9, 3) and (out == img).all()
-    smooth = np.full((6, 9, 3), 77, dtype=np.uint8)
-    out = decode_image(encode_jpeg(smooth, quality=95))  # baseline JPEG real
-    assert out.shape == (6, 9, 3)
-    assert np.abs(out.astype(int) - 77).max() <= 2
-    from finchspark.kernels.gif import encode_gif
-
-    gimg = np.array([[[255, 0, 0], [0, 255, 0]], [[0, 0, 255], [255, 0, 0]]], np.uint8)
-    out = decode_image(encode_gif(gimg))  # GIF real (palette exact)
-    assert (out == gimg).all()
-    from finchspark.kernels.webp import encode_webp_lossless
-
-    wimg = np.dstack([gimg, np.full((2, 2), 255, np.uint8)])
-    out = decode_image(encode_webp_lossless(wimg))  # lossless WebP real
-    assert (out == wimg).all()
-    lossy = b"RIFF" + (12).to_bytes(4, "little") + b"WEBP" + b"VP8 " + bytes(4)
-    with pytest.raises(NotImplementedError):  # lossy VP8 genuinely needs one
-        decode_image(lossy)
-    with pytest.raises(ValueError):  # garbage WebP fails loudly
-        decode_image(b"RIFF\x00\x00\x00\x00WEBP" + bytes(64))
-    with pytest.raises(ValueError):  # truncated PNG fails loudly, not wrongly
-        decode_image(encode_png(img)[:-8])
-
-
-def test_png_palette_and_gray_alpha():
-    import struct
-    import zlib
-
-    import numpy as np
-
-    from finchspark.kernels.png import decode_png, encode_png
-
-    # gray+alpha roundtrip (2 channels)
-    ga = np.arange(5 * 4 * 2, dtype=np.uint8).reshape(5, 4, 2)
-    assert (decode_png(encode_png(ga, filter_type=2)) == ga).all()
-
-    # hand-built palette image (color type 3) expands through PLTE
-    pal = np.array([[255, 0, 0], [0, 255, 0], [0, 0, 128]], dtype=np.uint8)
-    idx = np.array([[0, 1, 2], [2, 1, 0]], dtype=np.uint8)
-    raw = b"".join(b"\x00" + row.tobytes() for row in idx)
-
-    def chunk(ctype, body):
-        return (
-            struct.pack(">I", len(body)) + ctype + body
-            + struct.pack(">I", zlib.crc32(ctype + body) & 0xFFFFFFFF)
-        )
-
-    png = (
-        b"\x89PNG\r\n\x1a\n"
-        + chunk(b"IHDR", struct.pack(">IIBBBBB", 3, 2, 8, 3, 0, 0, 0))
-        + chunk(b"PLTE", pal.tobytes())
-        + chunk(b"IDAT", zlib.compress(raw))
-        + chunk(b"IEND", b"")
-    )
-    out = decode_png(png)
-    assert out.shape == (2, 3, 3)
-    assert (out == pal[idx]).all()
-
-
-def test_extract_image_features(spark):
-    import numpy as np
-
-    from finchspark.kernels.png import encode_png
-    from finchspark.operators.multimodal import extract_image_features
-
-    img1 = np.full((4, 5, 3), 10, dtype=np.uint8)
-    img1[:, :, 1] = 200
-    rows = [
-        (1, bytearray(encode_png(img1, filter_type=4))),
-        (2, bytearray(b"\xff\xd8\xff" + bytes(32))),  # garbage jpeg -> error row
-    ]
-    from finchspark.kernels.jpeg import encode_jpeg
-
-    img3 = np.full((5, 4), 99, dtype=np.uint8)  # grayscale baseline JPEG
-    rows.append((3, bytearray(encode_jpeg(img3, quality=95))))
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    out = {r["doc_id"]: r for r in extract_image_features(df).collect()}
-    r1 = out[1]
-    assert (r1["height"], r1["width"], r1["channels"]) == (4, 5, 3)
-    assert r1["channel_means"] == [10.0, 200.0, 10.0]
-    assert abs(r1["mean_pixel"] - (10 + 200 + 10) / 3) < 1e-12
-    assert r1["decode_error"] is None
-    assert out[2]["decode_error"].startswith("ValueError")  # poisoned payload
-    assert out[2]["height"] is None
-    r3 = out[3]  # real grayscale JPEG decode through the feature operator
-    assert (r3["height"], r3["width"], r3["channels"]) == (5, 4, 1)
-    assert abs(r3["mean_pixel"] - 99.0) <= 2.0
-    assert r3["decode_error"] is None
 
 
 def test_api_sketch_and_compare():
@@ -430,123 +309,6 @@ def test_spherical_kmeans_deterministic_and_separates():
     assign = (vn @ c1.T).argmax(axis=1)
     assert len(set(assign[:40])) == 1 and len(set(assign[40:])) == 1
     assert assign[0] != assign[40]
-
-
-def _wav_bytes(freq=440.0, rate=8000, sec=0.25, nch=1):
-    import io
-    import wave
-
-    t = np.arange(int(rate * sec)) / rate
-    mono = (np.sin(2 * np.pi * freq * t) * 0.5 * 32767).astype("<i2")
-    data = np.repeat(mono, nch).tobytes()
-    buf = io.BytesIO()
-    with wave.open(buf, "wb") as w:
-        w.setnchannels(nch)
-        w.setsampwidth(2)
-        w.setframerate(rate)
-        w.writeframes(data)
-    return buf.getvalue()
-
-
-def _mp4_bytes(duration=90, timescale=30):
-    def box(btype, body):
-        return (8 + len(body)).to_bytes(4, "big") + btype + body
-
-    ftyp = box(b"ftyp", b"isom" + b"\x00\x00\x02\x00" + b"isomiso2")
-    mvhd_body = bytes([0, 0, 0, 0]) + b"\x00" * 8 + timescale.to_bytes(4, "big") \
-        + duration.to_bytes(4, "big") + b"\x00" * 80
-    moov = box(b"moov", box(b"mvhd", mvhd_body))
-    return ftyp + moov + box(b"mdat", b"\x00" * 16)
-
-
-def test_audio_features_real_wav_and_poisoned(spark):
-    from finchspark.operators.multimodal import extract_audio_features
-
-    rows = [
-        (0, bytearray(_wav_bytes())),
-        (1, bytearray(_wav_bytes(freq=100.0, nch=2))),
-        (2, bytearray(b"fLaC not really")),  # compressed -> honest stub error
-        (3, bytearray(b"")),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {r["doc_id"]: r for r in extract_audio_features(df).collect()}
-    a = got[0]
-    assert a["sample_rate"] == 8000 and a["n_channels"] == 1
-    assert a["n_samples"] == 2000 and abs(a["duration_sec"] - 0.25) < 1e-9
-    assert abs(a["rms"] - 0.5 / np.sqrt(2)) < 0.01  # sine RMS = A/sqrt(2)
-    # 440 Hz sine crosses zero ~2*440 times/sec -> rate ~0.11
-    assert abs(a["zero_crossing_rate"] - 2 * 440 / 8000) < 0.01
-    assert got[1]["n_channels"] == 2 and got[1]["decode_error"] is None
-    assert "NotImplementedError" in got[2]["decode_error"]
-    assert got[3]["decode_error"] is not None
-
-
-def test_video_metadata_real_mp4_walk(spark):
-    from finchspark.operators.multimodal import (
-        extract_video_metadata,
-        sample_video_frames,
-    )
-
-    rows = [
-        (0, bytearray(_mp4_bytes(duration=90, timescale=30))),
-        (1, bytearray(b"\x1a\x45\xdf\xa3 webm-ish")),
-        (2, bytearray(b"garbage payload")),
-    ]
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {r["doc_id"]: r for r in extract_video_metadata(df).collect()}
-    assert got[0]["container"] == "mp4" and got[0]["brand"] == "isom"
-    assert got[0]["top_boxes"] == ["ftyp", "moov", "mdat"]
-    assert abs(got[0]["duration_sec"] - 3.0) < 1e-9 and got[0]["timescale"] == 30
-    assert got[1]["container"] == "matroska"
-    assert got[2]["parse_error"] is not None
-    with pytest.raises(NotImplementedError):
-        sample_video_frames(b"\x00\x00\x00\x08ftyp")
-
-
-def test_resize_images_roundtrip(spark):
-    """PNG → bilinear resize → PNG, decodable, right shape; a solid-color
-    image stays that color; a non-PNG payload surfaces decode_error."""
-    from finchspark.kernels.imageops import resize_bilinear, resize_nearest
-    from finchspark.kernels.png import decode_png, encode_png
-    from finchspark.operators.multimodal import resize_images
-
-    solid = np.full((20, 30, 3), (10, 200, 77), dtype=np.uint8)
-    grad = np.tile(np.arange(64, dtype=np.uint8)[None, :, None], (16, 1, 3))
-    rows = [
-        (0, bytearray(encode_png(solid))),
-        (1, bytearray(encode_png(grad))),
-        # lossy VP8: decode genuinely needs a codec library -> decode_error
-        (2, bytearray(b"RIFF" + (12).to_bytes(4, "little") + b"WEBP"
-                      + b"VP8 " + bytes(4))),
-    ]
-    from finchspark.kernels.jpeg import encode_jpeg
-
-    rows.append((3, bytearray(encode_jpeg(solid, quality=95))))  # JPEG in
-    from finchspark.kernels.webp import encode_webp_lossless
-
-    solid4 = np.dstack([solid, np.full(solid.shape[:2], 255, np.uint8)])
-    rows.append((4, bytearray(encode_webp_lossless(solid4))))  # VP8L in
-    df = spark.createDataFrame(rows, "doc_id long, payload binary")
-    got = {r["doc_id"]: r for r in resize_images(df, 8, 12).collect()}
-    out0 = decode_png(bytes(got[0]["payload_resized"]))
-    assert out0.shape == (8, 12, 3)
-    assert (out0 == np.array([10, 200, 77], np.uint8)).all()
-    out1 = decode_png(bytes(got[1]["payload_resized"]))
-    assert out1.shape == (8, 12, 3)
-    assert (np.diff(out1[0, :, 0].astype(int)) >= 0).all()  # gradient preserved
-    assert got[2]["payload_resized"] is None and "NotImplementedError" in got[2]["decode_error"]
-    out4 = decode_png(bytes(got[4]["payload_resized"]))  # WebP -> resize -> PNG
-    assert out4.shape[:2] == (8, 12)
-    assert (out4[..., :3] == np.array([10, 200, 77], np.uint8)).all()
-    out3 = decode_png(bytes(got[3]["payload_resized"]))  # JPEG -> resize -> PNG
-    assert out3.shape == (8, 12, 3)
-    assert np.abs(out3.astype(int) - np.array([10, 200, 77])).max() <= 3
-
-    # kernel-level identities: identity resize == input; nearest on 2x
-    # upscale repeats pixels
-    assert np.array_equal(resize_bilinear(grad, 16, 64), grad)
-    up = resize_nearest(solid, 40, 60)
-    assert up.shape == (40, 60, 3) and (up == solid[0, 0]).all()
 
 
 def test_weighted_jaccard_identities(spark):

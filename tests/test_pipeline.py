@@ -259,14 +259,20 @@ def test_tablestore_append_lineage_per_write(spark, cfg, tmp_path):
     df1 = spark.range(100).repartition(4)
     df2 = spark.range(100, 160).repartition(2)
     store.write("s", df1, mode="append")
+    assert store.read_meta("s")["count_source"] == "counted"  # no prior meta
     store.write("s", df2, mode="append")
     meta = store.read_meta("s")
     assert meta["row_count"] == 160  # cumulative
+    assert meta["count_source"] == "folded"  # previous meta's count + 60
     assert meta["write_row_count"] == 60  # this write only
     assert meta["n_partitions"] == 2  # df2's partitioning, not 4+2 conflated
     assert sum(meta["partition_rows"].values()) == 60
     assert store.read("s").count() == 160
     assert set(store.read("s").columns) == {"id"}
+    # a compaction-style overwrite recounts
+    store.write("s", store.read("s").localCheckpoint(eager=True).coalesce(1))
+    meta = store.read_meta("s")
+    assert (meta["row_count"], meta["count_source"]) == (160, "counted")
 
 
 def test_tablestore_write_id_unique_across_resume(spark, cfg, tmp_path):
