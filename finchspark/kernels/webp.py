@@ -6,7 +6,7 @@ max-symbol shortcut), meta prefix codes (huffman image), color cache, LZ77
 backward references with the 2D distance mapping, and all four transforms:
 predictor (14 modes), cross-color, subtract-green, and color-indexing with
 pixel bundling. Lossy VP8 chunks raise NotImplementedError (that codec
-genuinely needs a library; see `operators/multimodal.py`).
+genuinely needs a library).
 
 Encoder (`encode_webp_lossless`): fixture-grade VP8L — literal pixels with
 flat prefix codes, plus opt-in subtract-green, palette, and hand-placed
@@ -22,8 +22,9 @@ single-backref stream per code, observing which pixel each copies
 whenever libwebp is available) — not transcribed from libwebp source.
 
 Reference-parity note: the reference engine (onecodex/finch-rs) has no
-image path at all; this codec serves the north-star multimodal ingest
-(SURVEY.md LLM-pipeline operators) alongside kernels/{png,jpeg,gif}.py.
+image path at all, and no query, pipeline or benchmark path imports this
+module; only tests/test_webp.py does. It is the last piece of a removed
+media subsystem, kept until its deletion can be done on its own.
 """
 from __future__ import annotations
 

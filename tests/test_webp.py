@@ -157,15 +157,6 @@ def test_garbage_fails_loudly():
         decode_webp(data[:12] + b"VP8L" + (40).to_bytes(4, "little") + bytes(40))
 
 
-def test_decode_image_dispatch():
-    from finchspark.operators.multimodal import decode_image
-
-    img = _img((5, 9), 9)
-    out = decode_image(encode_webp_lossless(img))
-    assert out.shape == (5, 9, 4)
-    assert (out == img).all()
-
-
 # -------------------------------------------------------- differential tests
 @needs_libwebp
 def test_distance_map_matches_libwebp():
@@ -266,26 +257,6 @@ def test_length_prefix_roundtrip():
         sym, extra, bits = length_prefix(v)
         br = _BitReader(extra.to_bytes(4, "little"))
         assert _prefix_value(sym, br) == v
-
-
-def test_webp_through_spark_image_features(spark):
-    """The VP8L decoder wired through the Spark multimodal path: decode +
-    feature extraction inside the Arrow-batched operator, plus the honest
-    lossy-VP8 decode_error capture on the same run."""
-    from finchspark.operators.multimodal import extract_image_features
-
-    img = _img((7, 9), 12)
-    lossy = b"RIFF" + (12).to_bytes(4, "little") + b"WEBP" + b"VP8 " + (0).to_bytes(4, "little")
-    df = spark.createDataFrame(
-        [(1, bytearray(encode_webp_lossless(img))), (2, bytearray(lossy))],
-        "doc_id long, payload binary",
-    )
-    rows = {r["doc_id"]: r for r in extract_image_features(df).collect()}
-    ok = rows[1]
-    assert (ok["height"], ok["width"], ok["channels"]) == (7, 9, 4)
-    assert ok["decode_error"] is None
-    assert abs(ok["mean_pixel"] - img.astype(float).mean()) < 1e-9
-    assert rows[2]["decode_error"] is not None  # lossy VP8: honest stub
 
 
 @pytest.mark.parametrize("seed", range(4))
