@@ -12,7 +12,7 @@ Layout:
 - ``finchspark.plans``      end-to-end pipelines + checkpoint/resume
 - ``finchspark.sources``    table IO (parquet catalog, FASTA test reader)
 - ``finchspark.functions``  Catalyst column-expression helpers
-- ``finchspark.streaming``  incremental/streaming notes (out of scope v0)
+- ``finchspark.streaming``  incremental near-dup on Structured Streaming
 """
 
 __version__ = "0.1.0"

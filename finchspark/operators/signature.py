@@ -1,20 +1,16 @@
 """Signature stage: documents → per-document MinHash signature rows.
 
-Spark shape (SURVEY.md §3.1): `documents → (length-bucketed repartition) →
-mapInArrow(signature kernel) → signatures`. The whole batch is processed with
-a handful of numpy calls — content bytes are read straight out of the Arrow
-string buffers (zero-copy), every k-gram in the batch is hashed in one
-vectorized murmur3 call, and per-document sketches come from one segmented
-lexsort (`finchspark.kernels.segment`). No per-row Python anywhere.
+Spark shape (SURVEY.md §3.1): `documents → mapInArrow(signature kernel) →
+signatures`. The whole batch is processed with a handful of numpy calls —
+content bytes are read straight out of the Arrow string buffers (zero-copy),
+every k-gram in the batch is hashed in one vectorized murmur3 call, and
+per-document sketches come from one segmented lexsort
+(`finchspark.kernels.segment`). No per-row Python anywhere.
 
 Scale notes (100 TB): the stage is embarrassingly parallel — cost scales with
-input bytes and there is NO shuffle by default. `length_bucket=True` adds a
-repartitionByRange on content length; that is a full-corpus shuffle bought
-only to equalize per-batch shingle work, and the byte-bounded sub-batching
-below already bounds straggler batches — so it is OFF by default and should
-stay off at scale. Arrow batch size is bounded by
+input bytes and there is NO shuffle. Arrow batch size is bounded by
 `spark.sql.execution.arrow.maxRecordsPerBatch` plus the byte-bounded
-sub-batching (MAX_CHUNK_BYTES).
+sub-batching (MAX_CHUNK_BYTES), which also bounds straggler batches.
 """
 from __future__ import annotations
 
@@ -90,7 +86,6 @@ def build_signatures(
     config: PipelineConfig,
     key_cols: tuple[str, ...] = ("doc_id",),
     content_col: str = "content",
-    length_bucket: bool = False,
     filters=None,
 ) -> DataFrame:
     """Compute the `signatures` DataFrame for `df`.
@@ -121,13 +116,6 @@ def build_signatures(
         F.sha2(F.coalesce(F.col(content_col), F.lit("")), 256).alias("__sha256"),
         F.col(content_col).alias("__content"),
     )
-    if length_bucket:
-        # one Arrow batch ≈ similar total shingle work; avoids a straggler
-        # batch full of 64 KiB files next to batches of empty files
-        sel = sel.repartitionByRange(
-            max(df.sparkSession.sparkContext.defaultParallelism, 1),
-            F.length("__content"),
-        )
     key_schema = [sel.schema[c] for c in key_cols]
     out_schema = signature_schema(key_schema)
 

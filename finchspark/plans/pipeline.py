@@ -89,8 +89,6 @@ def near_duplicates(
     key_col: str = "doc_id",
     content_col: str = "content",
     store: TableStore | None = None,
-    include_simhash_path: bool = True,
-    include_exact_path: bool = True,
     assume_complete: bool = False,
     collapse_exact: bool = False,
 ) -> NearDupResult:
@@ -182,18 +180,17 @@ def near_duplicates(
         # the star map IS the exact path in collapsed mode (reps are
         # sha-distinct by construction, so exact_dup_pairs_sha finds nothing)
         edge_frames.append(star_edges)
-    elif include_exact_path:
+    else:
         edge_frames.append(
             exact_dup_pairs_sha(signatures, key_col).select(
                 F.col("key_a").alias("src"), F.col("key_b").alias("dst")
             )
         )
-    if include_simhash_path:
-        edge_frames.append(
-            simhash_candidate_pairs(signatures, config, key_col).select(
-                F.col("key_a").alias("src"), F.col("key_b").alias("dst")
-            )
+    edge_frames.append(
+        simhash_candidate_pairs(signatures, config, key_col).select(
+            F.col("key_a").alias("src"), F.col("key_b").alias("dst")
         )
+    )
     edges = edge_frames[0]
     for f in edge_frames[1:]:
         edges = edges.unionByName(f)

@@ -6,22 +6,15 @@ one-pass bounded-memory implementation of a batch semantic (size-(k+1) heap,
 with checkpoint/resume (`finchspark.plans.checkpoint`), which is the
 north-rule's resumability requirement.
 
-Two incremental deployments ARE shipped on Structured Streaming, both
-reusing the exact batch operators inside `foreachBatch` (one code path,
-one semantics):
-
-- `ingest.signatures_stream` — sketch new documents per micro-batch and
-  append to the signature store; restart resumes from the streaming
-  checkpoint without re-sketching.
-- `neardup.neardup_stream` — the full incremental dedup loop: new docs are
-  sketched, banded, and probed against the accumulated store, emitting each
-  verified near-dup pair exactly once (when its later member arrives).
-  Equivalence with the batch LSH→verify stage for any micro-batch split is
-  property-tested.
-
-A continuously-maintained clustering (streaming CC via
-`applyInPandasWithState`) remains future work: the reference defines no
-semantics to match for it, and the shipped periodic batch compaction
-(`operators.cc.connected_components` over the pairs table) covers the
-north-rule use.
+One incremental deployment is shipped on Structured Streaming:
+`neardup.neardup_stream`, the full incremental dedup loop. It reuses the
+exact batch operators inside `foreachBatch` (one code path, one semantics):
+new docs are sketched, banded, and probed against the accumulated signature
+store, emitting each verified near-dup pair exactly once (when its later
+member arrives); equivalence with the batch LSH→verify stage for any
+micro-batch split is property-tested. With `components_path` it also
+maintains the component map continuously (incremental contract-and-merge
+into a base table + changelog). Every write goes through a
+`plans.checkpoint.TableStore`, the same store the batch pipeline
+checkpoints to.
 """

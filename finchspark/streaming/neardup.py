@@ -1,10 +1,9 @@
 """Incremental streaming near-duplicate detection (SURVEY.md §2.7).
 
-Extends `ingest.signatures_stream` from "sketch new files" to the full
-production loop: every micro-batch of new documents is sketched, banded,
-and joined against the ACCUMULATED signature store, so verified near-dup
-pairs stream out as documents arrive — old documents are never re-sketched
-and old×old pairs are never recomputed.
+The production loop on Structured Streaming: every micro-batch of new
+documents is sketched, banded, and joined against the ACCUMULATED signature
+store, so verified near-dup pairs stream out as documents arrive — old
+documents are never re-sketched and old×old pairs are never recomputed.
 
 Exactly-once pair semantics (at the logical level): a pair (x, y) is
 emitted by precisely one micro-batch — the one in which its later member
@@ -16,30 +15,29 @@ property-tested in `tests/test_streaming.py`; the batch pipeline's
 SimHash short-doc fallback and sha256 exact-dup safety net remain batch
 compactions over the store, exactly as in the bounded pipeline.
 
-Physical caveats (same as `ingest.signatures_stream`): micro-batch progress
-is tracked by the Structured Streaming checkpoint, so a restart resumes at
-the failed epoch; the parquet appends themselves are transactional only on
-a table format that makes them so (Iceberg/Delta) — a mid-epoch crash
-between the pairs append and the store append can duplicate that epoch's
-rows on parquet.
+Storage: every write goes through one `plans.checkpoint.TableStore`
+(parquet locally, `IcebergTableStore` against a catalog), so the stream
+inherits the store's params-hash resume gate and per-write lineage.
+Micro-batch progress is tracked by the Structured Streaming checkpoint, so a
+restart resumes at the failed epoch; the appends themselves are
+transactional only on a table format that makes them so (Iceberg/Delta) — a
+mid-epoch crash between the pairs append and the store append can duplicate
+that epoch's rows on parquet.
 
 Clustering: pass `components_path` for a CONTINUOUSLY-MAINTAINED component
 map — each epoch's verified pairs are contracted into the previous map via
 `cc.connected_components_incremental_delta` (provably identical to a full
-recompute; per-epoch compute bounded by the delta, not the corpus).
-Storage is snapshot + delta: a full `v=<n>` snapshot every
-`compact_every` epochs, and between snapshots a `d=<n>` delta holding
-ONLY the changed rows (new nodes + relabelled members of touched
-components) — so per-epoch WRITE volume is also delta-bounded, not
-O(corpus). `latest_components` folds the deltas over the newest snapshot
-(later epoch wins per node); the retained previous-snapshot chain is the
-crash-restart point. On Iceberg the delta write becomes a MERGE into one
-table. Without `components_path`, clustering stays a periodic batch
-compaction (`operators.cc.connected_components` over the pairs table).
+recompute; per-epoch compute bounded by the delta, not the corpus). The map
+is a base table plus an append-only `<stage>_delta` changelog holding ONLY
+each epoch's changed rows (new nodes + relabelled members of touched
+components), so per-epoch WRITE volume is also delta-bounded; every
+`compact_every` epochs the folded map replaces the base and the changelog is
+truncated. `store_latest_components` folds the changelog over the base; on
+a real catalog the changelog becomes a MERGE source. Without
+`components_path`, clustering stays a periodic batch compaction
+(`operators.cc.connected_components` over the pairs table).
 """
 from __future__ import annotations
-
-import os
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
@@ -49,59 +47,14 @@ from ..config import PipelineConfig
 from ..operators.lsh import candidate_pairs_incremental
 from ..operators.signature import build_signatures
 from ..operators.verify import verify_pairs
-
-
-def _versions(components_path: str) -> list[tuple[int, str]]:
-    """Sorted [(version, kind)] for `v=<n>` snapshots / `d=<n>` deltas.
-
-    Only FULLY COMMITTED versions count: a directory qualifies iff it
-    contains Spark's `_SUCCESS` marker. A crash mid-write leaves a partial
-    directory (often just `_temporary/`); without this check a restart
-    would pick the partial dir as the newest version and either fail
-    schema inference or — worse, under a committer that promotes files
-    eagerly — silently read a truncated component map. Incomplete
-    directories are left in place (the next write to the same version
-    number uses mode("overwrite") and replaces them)."""
-    if not os.path.isdir(components_path):
-        return []
-    out = []
-    for d in os.listdir(components_path):
-        if d.startswith(("v=", "d=")) and os.path.exists(
-            os.path.join(components_path, d, "_SUCCESS")
-        ):
-            out.append((int(d.split("=", 1)[1]), d[0]))
-    return sorted(out)
-
-
-def latest_components(spark, components_path: str):
-    """(DataFrame | None, latest version int) for the snapshot+delta
-    component map under `components_path`: the newest `v=<n>` snapshot
-    with every later `d=<m>` delta folded over it in epoch order (a
-    delta's rows override the accumulated map per node)."""
-    vs = _versions(components_path)
-    if not vs:
-        return None, -1
-    snaps = [n for n, kind in vs if kind == "v"]
-    base = max(snaps)
-    cur = spark.read.parquet(f"{components_path}/v={base}")
-    for n, kind in vs:
-        if kind == "d" and n > base:
-            delta = spark.read.parquet(f"{components_path}/d={n}")
-            cur = cur.join(
-                delta.select("node"), "node", "left_anti"
-            ).unionByName(delta)
-    return cur, vs[-1][0]
-
-
-_latest_components = latest_components  # backward-compat alias
+from ..plans.checkpoint import TableStore
 
 
 def store_latest_components(spark, table_store, stage: str):
     """(DataFrame | None, n_delta_epochs): the component map maintained in a
-    TableStore as BASE table `stage` + append-only changelog `stage`_delta
-    (the Iceberg-shaped twin of the path-based snapshot+delta layout): fold
-    = base overridden per node by the latest-epoch delta row, for delta rows
-    STRICTLY NEWER than the base's `folded_epoch` watermark.
+    TableStore as BASE table `stage` + append-only changelog `stage`_delta:
+    fold = base overridden per node by the latest-epoch delta row, for delta
+    rows STRICTLY NEWER than the base's `folded_epoch` watermark.
 
     Crash-safety: compaction is two writes (replace base, truncate
     changelog) and a crash between them leaves the new base plus the
@@ -109,11 +62,25 @@ def store_latest_components(spark, table_store, stage: str):
     WITH the base data in the same table commit — makes that state a no-op:
     every leftover delta row has epoch_id <= folded_epoch and is ignored, so
     a half-finished compaction degrades to "changelog not yet truncated"
-    instead of stale deltas overriding fresh base labels."""
+    instead of stale deltas overriding fresh base labels.
+
+    A crash INSIDE the base overwrite is not recoverable from the store: a
+    parquet overwrite deletes the stage directory, `_finch_meta.json`
+    included, so the base reads as missing while the changelog (always
+    written after the base) is present. Rebuilding from the retried epoch's
+    edges alone would silently drop every earlier label, so that state
+    raises instead."""
     from pyspark.sql.window import Window
 
     delta_stage = f"{stage}_delta"
     if not table_store.exists(stage):
+        if table_store.exists(delta_stage):
+            raise RuntimeError(
+                f"torn compaction: changelog stage '{delta_stage}' exists but "
+                f"base stage '{stage}' does not (a crash inside the base "
+                "overwrite); the component map cannot be rebuilt from the "
+                "changelog alone — recompute it in batch from the pairs stage"
+            )
         return None, 0
     base = table_store.read(stage)
     watermark = -1
@@ -151,7 +118,8 @@ def neardup_stream(
     available_now: bool = True,
     components_path: str | None = None,
     compact_every: int = 8,
-    table_store=None,
+    *,
+    table_store: TableStore,
 ) -> StreamingQuery:
     """Start the incremental near-dup query.
 
@@ -166,17 +134,13 @@ def neardup_stream(
     With `available_now=True` the query drains what is currently available
     and stops (incremental-compaction mode); False = continuous.
 
-    `table_store`: a `plans.checkpoint.TableStore` (e.g. `IcebergTableStore`
-    against a real catalog) — when given, `store_path`/`pairs_path`/
-    `components_path` are STAGE NAMES in that store rather than filesystem
-    paths, and every write goes through the store's V2 write path with its
-    params-hash resume gate and per-write lineage metrics: signatures and
-    pairs are per-epoch appends; the component map is a base table +
-    append-only `<stage>_delta` changelog truncated at each compaction
-    (the Iceberg-shaped twin of the path-based `v=<n>`/`d=<n>` layout; on a
-    real catalog the changelog naturally becomes a MERGE source). One code
-    path for the 100-TB deployment: the local parquet mode below is the
-    `table_store=None` degenerate case.
+    `table_store` (required): the `plans.checkpoint.TableStore` every write
+    goes through (e.g. `IcebergTableStore` against a real catalog).
+    `store_path`/`pairs_path`/`components_path` are STAGE NAMES in it, so
+    each write gets the store's params-hash resume gate and per-write
+    lineage metrics: signatures and pairs are per-epoch appends; the
+    component map is a base table + append-only `<stage>_delta` changelog
+    truncated every `compact_every` epochs (module docstring).
     """
     key_col = key_cols[0]
 
@@ -191,19 +155,12 @@ def neardup_stream(
         ).persist()
         kept = None
         try:
-            if table_store is not None:
-                have_store = table_store.exists(store_path)
-                all_sigs = (
-                    table_store.read(store_path).unionByName(new_sigs)
-                    if have_store
-                    else new_sigs
-                )
-            elif os.path.isdir(store_path) and any(
-                f.endswith(".parquet") for f in os.listdir(store_path)
-            ):
-                all_sigs = spark.read.parquet(store_path).unionByName(new_sigs)
-            else:
-                all_sigs = new_sigs
+            have_store = table_store.exists(store_path)
+            all_sigs = (
+                table_store.read(store_path).unionByName(new_sigs)
+                if have_store
+                else new_sigs
+            )
             cands = candidate_pairs_incremental(
                 new_sigs, all_sigs, config.lsh, key_col
             )
@@ -217,11 +174,8 @@ def neardup_stream(
             tagged_pairs = kept.withColumn(
                 "epoch_id", F.lit(int(epoch_id)).cast("long")
             )
-            if table_store is not None:
-                table_store.write(pairs_path, tagged_pairs, mode="append")
-            else:
-                tagged_pairs.write.mode("append").parquet(pairs_path)
-            if components_path is not None and table_store is not None:
+            table_store.write(pairs_path, tagged_pairs, mode="append")
+            if components_path is not None:
                 from ..operators.cc import (
                     connected_components,
                     connected_components_incremental_delta,
@@ -294,66 +248,7 @@ def neardup_stream(
                             ),
                             mode="append",
                         )
-            elif components_path is not None:
-                # continuously-maintained clustering: contract-and-merge the
-                # epoch's pairs into the snapshot+delta component map —
-                # per-epoch compute AND write volume bounded by the delta
-                # (cc.connected_components_incremental_delta docstring).
-                # Versioned dirs instead of in-place overwrite: Spark cannot
-                # overwrite a path it is reading, and the retained
-                # previous-snapshot chain is the crash-restart point. On
-                # Iceberg this becomes a MERGE into one table.
-                from ..operators.cc import (
-                    connected_components,
-                    connected_components_incremental_delta,
-                )
-
-                edges = kept.select(
-                    F.col("key_a").alias("src"), F.col("key_b").alias("dst")
-                )
-                # cheap cache scan (kept is persisted + materialized); see
-                # the table-store branch above
-                n_edges = kept.count()
-                prev, v = latest_components(spark, components_path)
-                snaps = [n for n, k in _versions(components_path) if k == "v"]
-                last_snap = max(snaps, default=-1)
-                if prev is None:
-                    connected_components(edges).write.mode("overwrite").parquet(
-                        f"{components_path}/v={v + 1}"
-                    )
-                else:
-                    from ..operators.cc import _BROADCAST_REMAP_MAX_EDGES
-
-                    full, changed = connected_components_incremental_delta(
-                        prev,
-                        edges,
-                        broadcast_remap=n_edges <= _BROADCAST_REMAP_MAX_EDGES,
-                    )
-                    if v + 1 - last_snap >= compact_every:
-                        # compaction epoch: full snapshot, then drop
-                        # everything before the PREVIOUS snapshot (that
-                        # chain stays readable as the restart point)
-                        full.write.mode("overwrite").parquet(
-                            f"{components_path}/v={v + 1}"
-                        )
-                        import shutil
-
-                        for n, kind in _versions(components_path):
-                            if n < last_snap:
-                                shutil.rmtree(
-                                    os.path.join(
-                                        components_path, f"{kind}={n}"
-                                    ),
-                                    ignore_errors=True,
-                                )
-                    else:
-                        changed.write.mode("overwrite").parquet(
-                            f"{components_path}/d={v + 1}"
-                        )
-            if table_store is not None:
-                table_store.write(store_path, new_sigs, mode="append")
-            else:
-                new_sigs.write.mode("append").parquet(store_path)
+            table_store.write(store_path, new_sigs, mode="append")
         finally:
             # both caches released even when an append throws — foreachBatch
             # retries in a long-lived session would otherwise accumulate

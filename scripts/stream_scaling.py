@@ -3,7 +3,7 @@
 Replays a sharded synthetic corpus (FIXTURES.md §B) as micro-batches
 through `streaming/neardup.py` — the continuous near-dup path: per-epoch
 signatures, incremental LSH probe against the accumulated store, verify,
-and the snapshot+delta component map — at local[N] and local[4N] in
+and the base + changelog component map — at local[N] and local[4N] in
 separate JVMs, interleaved (N, 4N, N, 4N, ...), best-of-k per level.
 
 Unlike the batch job-scaling harness (SPARK_GRAFT_NO_WRITE=1), the store

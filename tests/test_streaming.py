@@ -1,12 +1,22 @@
-"""Structured Streaming signature ingest: micro-batch output == batch
-operator output; a restarted query resumes from the checkpoint and only
-sketches NEW files."""
+"""Structured Streaming near-dup detection through a TableStore: the
+streamed pair set and signature store equal the batch operators' output for
+any micro-batch split; a restarted query resumes from the checkpoint without
+re-sketching or re-emitting; the continuously-maintained component map
+equals batch CC and survives (or refuses) crashes between its writes."""
 import pytest
+from pyspark.sql import functions as F
 
 from finchspark.config import PipelineConfig
 from finchspark.kernels import SketchParams
+from finchspark.operators.cc import connected_components
+from finchspark.operators.lsh import candidate_pairs
 from finchspark.operators.signature import build_signatures
-from finchspark.streaming.ingest import signatures_stream
+from finchspark.operators.verify import verify_pairs
+from finchspark.plans.checkpoint import TableStore
+from finchspark.sources.synth import synth_documents
+from finchspark.streaming.neardup import neardup_stream, store_latest_components
+
+SCHEMA = "doc_id long, content string"
 
 
 @pytest.fixture()
@@ -15,146 +25,115 @@ def cfg():
 
 
 def _docs(spark, rows):
-    return spark.createDataFrame(rows, "doc_id long, content string")
+    return spark.createDataFrame(rows, SCHEMA)
 
 
-def test_stream_matches_batch_and_resumes(spark, cfg, tmp_path):
-    src = tmp_path / "incoming"
-    out = str(tmp_path / "signatures")
-    ckpt = str(tmp_path / "ckpt")
-    src.mkdir()
+def _synth_rows(n_base):
+    docs, _ = synth_documents(n_base=n_base)
+    return [(d["doc_id"], d["content"]) for d in docs]
 
-    first = [(i, f"document number {i} with some repeated body text " * 4) for i in range(20)]
-    _docs(spark, first).write.mode("append").parquet(str(src))
 
-    schema = "doc_id long, content string"
-    stream = spark.readStream.schema(schema).parquet(str(src))
-    q = signatures_stream(stream, cfg, out, ckpt)
-    q.awaitTermination(120)
+def _stream(spark, src, chunks):
+    """Append each chunk to `src` as its own file and return a stream over
+    `src` reading one file per micro-batch."""
+    src.mkdir(exist_ok=True)
+    for chunk in chunks:
+        _docs(spark, chunk).coalesce(1).write.mode("append").parquet(str(src))
+    return spark.readStream.schema(SCHEMA).option("maxFilesPerTrigger", 1).parquet(
+        str(src)
+    )
 
-    got = {r["doc_id"]: r for r in spark.read.parquet(out).collect()}
-    want = {
-        r["doc_id"]: r
-        for r in build_signatures(_docs(spark, first), cfg, key_cols=("doc_id",)).collect()
+
+def _batch_pairs(spark, cfg, rows):
+    """The batch LSH->verify pair set over `rows`."""
+    sigs = build_signatures(_docs(spark, rows), cfg, key_cols=("doc_id",))
+    cands, _ = candidate_pairs(sigs, cfg.lsh, key_col="doc_id")
+    return verify_pairs(cands, sigs, cfg, key_col="doc_id").filter(
+        F.col("jaccard") >= cfg.jaccard_threshold
+    )
+
+
+def _batch_components(spark, cfg, rows):
+    pairs = _batch_pairs(spark, cfg, rows)
+    return {
+        (r["node"], r["component"])
+        for r in connected_components(
+            pairs.select(F.col("key_a").alias("src"), F.col("key_b").alias("dst"))
+        ).collect()
     }
-    assert set(got) == set(want)
-    for k in want:
-        assert got[k]["sha256"] == want[k]["sha256"]
-        assert got[k]["hashes"] == want[k]["hashes"]
-
-    # append new files; a fresh query on the same checkpoint processes ONLY
-    # the new rows (no re-sketching of already-committed ones)
-    second = [(100 + i, f"fresh follow-up content {i} " * 6) for i in range(5)]
-    _docs(spark, second).write.mode("append").parquet(str(src))
-    stream2 = spark.readStream.schema(schema).parquet(str(src))
-    q2 = signatures_stream(stream2, cfg, out, ckpt)
-    q2.awaitTermination(120)
-
-    after = spark.read.parquet(out)
-    assert after.count() == len(first) + len(second)  # no duplicates
-    ids = {r["doc_id"] for r in after.select("doc_id").collect()}
-    assert ids == {i for i, _ in first} | {i for i, _ in second}
 
 
 def test_neardup_stream_matches_batch_lsh_stage(spark, cfg, tmp_path):
     """Streaming incremental near-dup over ANY micro-batch split == the
     batch LSH->verify pair set on the full corpus, with no duplicate pairs
-    across epochs."""
-    from pyspark.sql import functions as F
-
-    from finchspark.operators.lsh import candidate_pairs
-    from finchspark.operators.verify import verify_pairs
-    from finchspark.sources.synth import synth_documents
-    from finchspark.streaming.neardup import neardup_stream
-
-    docs, _ = synth_documents(n_base=36)
-    rows = [(d["doc_id"], d["content"]) for d in docs]
-
-    src = tmp_path / "incoming"
-    store = str(tmp_path / "store")
-    pairs_out = str(tmp_path / "pairs")
-    ckpt = str(tmp_path / "ckpt")
-    src.mkdir()
+    across epochs; the signature store == the batch signature operator."""
+    rows = _synth_rows(36)
+    store = TableStore(tmp_path / "store", cfg.params_hash())
     # three uneven micro-batches (each its own file + maxFilesPerTrigger=1)
-    for chunk in (rows[:11], rows[11:40], rows[40:]):
-        _docs(spark, chunk).coalesce(1).write.mode("append").parquet(str(src))
-
-    stream = (
-        spark.readStream.schema("doc_id long, content string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
+    stream = _stream(spark, tmp_path / "incoming", (rows[:11], rows[11:40], rows[40:]))
+    q = neardup_stream(
+        stream, cfg, "signatures", "pairs", str(tmp_path / "ckpt"), table_store=store
     )
-    q = neardup_stream(stream, cfg, store, pairs_out, ckpt)
     q.awaitTermination(240)
 
-    got_rows = spark.read.parquet(pairs_out).collect()
+    got_rows = store.read("pairs").collect()
     got = {(r["key_a"], r["key_b"]) for r in got_rows}
     assert len(got) == len(got_rows), "a pair was emitted by two epochs"
     assert {r["epoch_id"] for r in got_rows} != {0}, "expected >1 micro-batch"
 
-    sigs = build_signatures(_docs(spark, rows), cfg, key_cols=("doc_id",))
-    cands, _ = candidate_pairs(sigs, cfg.lsh, key_col="doc_id")
-    want_rows = verify_pairs(cands, sigs, cfg, key_col="doc_id").filter(
-        F.col("jaccard") >= cfg.jaccard_threshold
-    )
-    want = {(r["key_a"], r["key_b"]) for r in want_rows.collect()}
+    want = {(r["key_a"], r["key_b"]) for r in _batch_pairs(spark, cfg, rows).collect()}
     assert want, "fixture must plant near-dup pairs"
     assert got == want
 
-    # store holds each signature exactly once
-    assert spark.read.parquet(store).count() == len(rows)
+    # store holds each signature exactly once, as the batch operator built it
+    stored = store.read("signatures")
+    assert stored.count() == len(rows)
+    got_sigs = {r["doc_id"]: r for r in stored.collect()}
+    want_sigs = {
+        r["doc_id"]: r
+        for r in build_signatures(_docs(spark, rows), cfg, key_cols=("doc_id",)).collect()
+    }
+    assert set(got_sigs) == set(want_sigs)
+    for k in want_sigs:
+        assert got_sigs[k]["sha256"] == want_sigs[k]["sha256"]
+        assert got_sigs[k]["hashes"] == want_sigs[k]["hashes"]
 
 
 def test_neardup_stream_resumes_without_duplicate_pairs(spark, cfg, tmp_path):
     """Stop after the first micro-batch, add files, restart on the same
     checkpoint: old docs are not re-sketched and no pair is re-emitted."""
-    from pyspark.sql import functions as F
-
-    from finchspark.sources.synth import synth_documents
-    from finchspark.streaming.neardup import neardup_stream
-
-    docs, _ = synth_documents(n_base=24)
-    rows = [(d["doc_id"], d["content"]) for d in docs]
+    rows = _synth_rows(24)
     src = tmp_path / "incoming"
-    store = str(tmp_path / "store")
-    pairs_out = str(tmp_path / "pairs")
     ckpt = str(tmp_path / "ckpt")
-    src.mkdir()
-    schema = "doc_id long, content string"
+    store = TableStore(tmp_path / "store", cfg.params_hash())
 
-    _docs(spark, rows[:15]).coalesce(1).write.mode("append").parquet(str(src))
     q = neardup_stream(
-        spark.readStream.schema(schema).parquet(str(src)), cfg, store,
-        pairs_out, ckpt,
+        _stream(spark, src, (rows[:15],)), cfg, "signatures", "pairs", ckpt,
+        table_store=store,
     )
     q.awaitTermination(240)
-    n_store_1 = spark.read.parquet(store).count()
+    n_store_1 = store.read("signatures").count()
     assert n_store_1 == 15
 
-    _docs(spark, rows[15:]).coalesce(1).write.mode("append").parquet(str(src))
     q2 = neardup_stream(
-        spark.readStream.schema(schema).parquet(str(src)), cfg, store,
-        pairs_out, ckpt,
+        _stream(spark, src, (rows[15:],)), cfg, "signatures", "pairs", ckpt,
+        table_store=store,
     )
     q2.awaitTermination(240)
 
-    assert spark.read.parquet(store).count() == len(rows)  # no re-sketch
-    got_rows = spark.read.parquet(pairs_out).collect()
+    assert store.read("signatures").count() == len(rows)  # no re-sketch
+    got_rows = store.read("pairs").collect()
     got = {(r["key_a"], r["key_b"]) for r in got_rows}
     assert len(got) == len(got_rows)  # no duplicate pair across the restart
     # every planted cross-boundary pair was caught by the second run
-    from finchspark.operators.lsh import candidate_pairs
-    from finchspark.operators.verify import verify_pairs
-
-    sigs = build_signatures(_docs(spark, rows), cfg, key_cols=("doc_id",))
-    cands, _ = candidate_pairs(sigs, cfg.lsh, key_col="doc_id")
-    want = {
-        (r["key_a"], r["key_b"])
-        for r in verify_pairs(cands, sigs, cfg, key_col="doc_id")
-        .filter(F.col("jaccard") >= cfg.jaccard_threshold)
-        .collect()
-    }
+    want = {(r["key_a"], r["key_b"]) for r in _batch_pairs(spark, cfg, rows).collect()}
     assert got == want
+
+
+def test_neardup_stream_requires_table_store(cfg):
+    """The TableStore is the only storage path: no store, no query."""
+    with pytest.raises(TypeError, match="table_store"):
+        neardup_stream(None, cfg, "signatures", "pairs", "ckpt")
 
 
 def test_candidate_pairs_incremental_caps_store_buckets(spark, cfg):
@@ -175,104 +154,47 @@ def test_candidate_pairs_incremental_caps_store_buckets(spark, cfg):
     assert uncapped.count() == 11  # doc 0 paired with every other member
 
 
-def test_latest_components_skips_uncommitted_versions(spark, tmp_path):
-    """ADVICE r4: a crash mid-snapshot/delta write leaves a partial dir (no
-    _SUCCESS); restart must resume from the last FULLY COMMITTED version,
-    not fail schema inference on the partial one or read it as a silently
-    wrong map."""
-    import os
-
-    from finchspark.streaming.neardup import _versions, latest_components
-
-    comp = tmp_path / "components"
-    spark.createDataFrame(
-        [(1, 1), (2, 1)], "node long, component long"
-    ).write.parquet(str(comp / "v=0"))
-    spark.createDataFrame(
-        [(3, 1)], "node long, component long"
-    ).write.parquet(str(comp / "d=1"))
-    # simulated crash: d=2 exists but never committed (only _temporary junk)
-    os.makedirs(comp / "d=2" / "_temporary")
-    (comp / "d=2" / "part-00000.parquet").write_bytes(b"partial garbage")
-
-    assert _versions(str(comp)) == [(0, "v"), (1, "d")]
-    final, v = latest_components(spark, str(comp))
-    assert v == 1  # resumes from the last committed version
-    got = {(r["node"], r["component"]) for r in final.collect()}
-    assert got == {(1, 1), (2, 1), (3, 1)}
-
-
 @pytest.mark.parametrize(
     "compact_every,layout",
     [
-        (8, {("v", 0), ("d", 1), ("d", 2)}),  # snapshot then delta-only
-        (2, {("v", 0), ("d", 1), ("v", 2)}),  # mid-stream compaction
+        # (base folded_epoch watermark, changelog epoch_ids)
+        (8, (0, {1, 2})),  # base from epoch 0, then changelog-only
+        (2, (2, set())),  # mid-stream compaction: base rewritten, log truncated
     ],
 )
 def test_neardup_stream_continuous_clustering(
     spark, cfg, tmp_path, compact_every, layout
 ):
-    """With components_path set, the stream maintains the snapshot+delta
+    """With components_path set, the stream maintains the base + changelog
     component map incrementally per epoch (delta-bounded writes); the
     folded latest map equals the batch pipeline's LSH-path components over
-    the full corpus, and the on-disk layout matches the compaction
-    cadence."""
-    import os
-
-    from pyspark.sql import functions as F
-
-    from finchspark.operators.cc import connected_components
-    from finchspark.operators.lsh import candidate_pairs
-    from finchspark.operators.verify import verify_pairs
-    from finchspark.sources.synth import synth_documents
-    from finchspark.streaming.neardup import latest_components, neardup_stream
-
-    docs, _ = synth_documents(n_base=36)
-    rows = [(d["doc_id"], d["content"]) for d in docs]
-
-    src = tmp_path / "incoming"
-    comp_out = str(tmp_path / "components")
-    src.mkdir()
-    for chunk in (rows[:11], rows[11:40], rows[40:]):
-        _docs(spark, chunk).coalesce(1).write.mode("append").parquet(str(src))
-
-    stream = (
-        spark.readStream.schema("doc_id long, content string")
-        .option("maxFilesPerTrigger", 1)
-        .parquet(str(src))
-    )
+    the full corpus, and the base watermark and changelog epochs match the
+    compaction cadence."""
+    rows = _synth_rows(36)
+    store = TableStore(tmp_path / "store", cfg.params_hash())
+    stream = _stream(spark, tmp_path / "incoming", (rows[:11], rows[11:40], rows[40:]))
     q = neardup_stream(
         stream,
         cfg,
-        str(tmp_path / "store"),
-        str(tmp_path / "pairs"),
+        "signatures",
+        "pairs",
         str(tmp_path / "ckpt"),
-        components_path=comp_out,
+        components_path="components",
         compact_every=compact_every,
+        table_store=store,
     )
     q.awaitTermination(240)
 
-    got_layout = {
-        (d[0], int(d.split("=", 1)[1]))
-        for d in os.listdir(comp_out)
-        if d.startswith(("v=", "d="))
+    watermark = store.read("components").select(F.max("folded_epoch")).first()[0]
+    log_epochs = {
+        r["epoch_id"] for r in store.read("components_delta").select("epoch_id").collect()
     }
-    assert got_layout == layout
-    final, v = latest_components(spark, comp_out)
-    assert v == 2
+    assert (watermark, log_epochs) == layout
+    final, n_delta = store_latest_components(spark, store, "components")
+    assert n_delta == len(log_epochs)
     got = {(r["node"], r["component"]) for r in final.collect()}
 
-    sigs = build_signatures(_docs(spark, rows), cfg, key_cols=("doc_id",))
-    cands, _ = candidate_pairs(sigs, cfg.lsh, key_col="doc_id")
-    pairs = verify_pairs(cands, sigs, cfg, key_col="doc_id").filter(
-        F.col("jaccard") >= cfg.jaccard_threshold
-    )
-    want = {
-        (r["node"], r["component"])
-        for r in connected_components(
-            pairs.select(F.col("key_a").alias("src"), F.col("key_b").alias("dst"))
-        ).collect()
-    }
+    want = _batch_components(spark, cfg, rows)
     assert want and got == want
 
 
@@ -283,14 +205,7 @@ def test_neardup_stream_iceberg_store(spark, cfg, tmp_path, monkeypatch):
     mid-stream compaction, a second run RESUMES against the same store
     without re-sketching or re-emitting pairs, and the folded final map
     equals the batch pipeline's components over the full corpus."""
-    from pyspark.sql import functions as F
-
-    from finchspark.operators.cc import connected_components
-    from finchspark.operators.lsh import candidate_pairs
-    from finchspark.operators.verify import verify_pairs
     from finchspark.plans.checkpoint import IcebergTableStore
-    from finchspark.sources.synth import synth_documents
-    from finchspark.streaming.neardup import neardup_stream, store_latest_components
     from tests.test_pipeline import _fake_v2_catalog
 
     calls, tables = _fake_v2_catalog(spark, tmp_path, monkeypatch)
@@ -298,8 +213,7 @@ def test_neardup_stream_iceberg_store(spark, cfg, tmp_path, monkeypatch):
         tmp_path / "meta", cfg.params_hash(), namespace="finch.stream"
     )
 
-    docs, _ = synth_documents(n_base=36)
-    rows = [(d["doc_id"], d["content"]) for d in docs]
+    rows = _synth_rows(36)
     src = tmp_path / "incoming"
     ckpt = str(tmp_path / "ckpt")
     src.mkdir()
@@ -344,90 +258,42 @@ def test_neardup_stream_iceberg_store(spark, cfg, tmp_path, monkeypatch):
 
     final, _ = store_latest_components(spark, store2, "components")
     got = {(r["node"], r["component"]) for r in final.collect()}
-    sigs = build_signatures(_docs(spark, rows), cfg, key_cols=("doc_id",))
-    cands, _ = candidate_pairs(sigs, cfg.lsh, key_col="doc_id")
-    pairs = verify_pairs(cands, sigs, cfg, key_col="doc_id").filter(
-        F.col("jaccard") >= cfg.jaccard_threshold
-    )
-    want = {
-        (r["node"], r["component"])
-        for r in connected_components(
-            pairs.select(F.col("key_a").alias("src"), F.col("key_b").alias("dst"))
-        ).collect()
-    }
+    want = _batch_components(spark, cfg, rows)
     assert want and got == want
     assert set(got_pairs) == {
-        (r["key_a"], r["key_b"]) for r in pairs.collect()
+        (r["key_a"], r["key_b"]) for r in _batch_pairs(spark, cfg, rows).collect()
     }
 
 
-def test_neardup_stream_recovers_from_partial_component_write(
-    spark, cfg, tmp_path
-):
-    """System-level crash recovery (ADVICE r4 medium): after epoch 1 a
-    partial component version is planted (a crash mid-write: directory
-    present, no _SUCCESS) — the restarted stream must resume from the last
-    COMMITTED version, overwrite the partial directory, and still converge
-    to the batch closure."""
-    import os
-    import shutil
-
-    from pyspark.sql import functions as F
-
-    from finchspark.operators.cc import connected_components
-    from finchspark.operators.lsh import candidate_pairs
-    from finchspark.operators.verify import verify_pairs
-    from finchspark.sources.synth import synth_documents
-    from finchspark.streaming.neardup import latest_components, neardup_stream
-
-    docs, _ = synth_documents(n_base=30)
-    rows = [(d["doc_id"], d["content"]) for d in docs]
+def test_torn_compaction_raises(spark, cfg, tmp_path):
+    """A crash INSIDE a compaction's base overwrite leaves the changelog but
+    no base: a parquet overwrite deletes the stage directory, its
+    `_finch_meta.json` included. Folding must refuse loudly, and a retried
+    epoch must fail rather than rebuild the base from its own edges alone
+    (which would silently drop every earlier label)."""
+    rows = _synth_rows(24)
     src = tmp_path / "incoming"
-    comp = str(tmp_path / "components")
-    src.mkdir()
-    schema = "doc_id long, content string"
+    ckpt = str(tmp_path / "ckpt")
+    store = TableStore(tmp_path / "store", cfg.params_hash())
 
-    _docs(spark, rows[:18]).coalesce(1).write.mode("append").parquet(str(src))
-    q = neardup_stream(
-        spark.readStream.schema(schema).parquet(str(src)),
-        cfg, str(tmp_path / "store"), str(tmp_path / "pairs"),
-        str(tmp_path / "ckpt"), components_path=comp,
-    )
-    q.awaitTermination(240)
-    committed = sorted(os.listdir(comp))
-    assert any((tmp_path / "components" / d / "_SUCCESS").exists() for d in committed)
+    def run(chunks):
+        return neardup_stream(
+            _stream(spark, src, chunks), cfg, "signatures", "pairs", ckpt,
+            components_path="components", table_store=store,
+        )
 
-    # simulated crash mid-write of the NEXT version: partial dir, no _SUCCESS
-    partial = os.path.join(comp, "d=1")
-    os.makedirs(os.path.join(partial, "_temporary"), exist_ok=True)
-    with open(os.path.join(partial, "part-00000.parquet"), "wb") as f:
-        f.write(b"partial garbage from a crashed writer")
+    run((rows[:12], rows[12:20])).awaitTermination(240)
+    assert store.exists("components") and store.exists("components_delta")
+    (tmp_path / "store" / "components" / "_finch_meta.json").unlink()
 
-    _docs(spark, rows[18:]).coalesce(1).write.mode("append").parquet(str(src))
-    q2 = neardup_stream(
-        spark.readStream.schema(schema).parquet(str(src)),
-        cfg, str(tmp_path / "store"), str(tmp_path / "pairs"),
-        str(tmp_path / "ckpt"), components_path=comp,
-    )
-    q2.awaitTermination(240)
+    with pytest.raises(RuntimeError, match="torn compaction") as err:
+        store_latest_components(spark, store, "components")
+    assert "'components'" in str(err.value)
+    assert "'components_delta'" in str(err.value)
 
-    final, _ = latest_components(spark, comp)
-    got = {(r["node"], r["component"]) for r in final.collect()}
-    from finchspark.operators.signature import build_signatures as _bs
-
-    sigs = _bs(_docs(spark, rows), cfg, key_cols=("doc_id",))
-    cands, _ = candidate_pairs(sigs, cfg.lsh, key_col="doc_id")
-    pairs = verify_pairs(cands, sigs, cfg, key_col="doc_id").filter(
-        F.col("jaccard") >= cfg.jaccard_threshold
-    )
-    want = {
-        (r["node"], r["component"])
-        for r in connected_components(
-            pairs.select(F.col("key_a").alias("src"), F.col("key_b").alias("dst"))
-        ).collect()
-    }
-    assert want and got == want
-    shutil.rmtree(str(tmp_path), ignore_errors=True)
+    with pytest.raises(Exception, match="torn compaction"):
+        run((rows[20:],)).awaitTermination(240)
+    assert not store.exists("components")
 
 
 def test_compaction_crash_window_is_noop(spark, tmp_path):
@@ -436,11 +302,6 @@ def test_compaction_crash_window_is_noop(spark, tmp_path):
     in-table folded_epoch watermark makes store_latest_components ignore
     every leftover delta row with epoch_id <= watermark, so stale
     pre-compaction labels can never override the fresh base."""
-    from pyspark.sql import functions as F
-
-    from finchspark.plans.checkpoint import TableStore
-    from finchspark.streaming.neardup import store_latest_components
-
     store = TableStore(tmp_path / "meta", params_hash="t")
     # fresh base as the compaction at epoch 5 wrote it (watermark IN-table)
     base = spark.createDataFrame(
@@ -468,9 +329,6 @@ def test_changelog_epoch_id_is_always_long(spark, tmp_path, cfg):
     """Every epoch_id written by the streaming table-store path is int64:
     mixed int32/int64 parquet files for one column make the vectorized
     reader schema-dependent on file listing order (round-5 ADVICE)."""
-    from finchspark.plans.checkpoint import TableStore
-    from finchspark.streaming.neardup import neardup_stream
-
     store = TableStore(tmp_path / "meta", cfg.params_hash())
     rows = [
         (i, f"streamed document body {i % 4} with shared text " * 6)
