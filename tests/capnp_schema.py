@@ -9,11 +9,39 @@ with a from-scratch reader sharing NO code with
 cannot self-verify. This is the closest available stand-in for parity
 against a reference-written binary (no Rust toolchain in the sandbox): the
 byte layout is pinned to the schema mechanically instead of by hand.
+
+The schema text is read from a finch-rs checkout (`SCHEMA_DIR`), so the
+schema-derived checks run only where that checkout's
+`lib/src/serialization/*.capnp` is present and are skipped elsewhere. No
+schema text is vendored: the repository holds only the field ordinals and
+offsets written in the codec's own comments, and a schema rebuilt from
+those would pin the codec to itself — the circular check this decoder
+exists to avoid.
 """
 from __future__ import annotations
 
+import os
 import re
 import struct
+
+import pytest
+
+# `lib/src/serialization/` of the finch-rs checkout at $FINCH_RS_CHECKOUT
+SCHEMA_DIR = os.path.join(
+    os.environ.get("FINCH_RS_CHECKOUT", "/root/reference"),
+    "lib", "src", "serialization",
+)
+FINCH_SCHEMA = os.path.join(SCHEMA_DIR, "finch.capnp")
+MASH_SCHEMA = os.path.join(SCHEMA_DIR, "mash.capnp")
+
+
+def requires_schema(path: str):
+    """Skip a test whose check needs the reference schema at `path` when
+    that file is absent; it runs wherever the file exists."""
+    return pytest.mark.skipif(
+        not os.path.exists(path), reason=f"reference schema {path} is absent"
+    )
+
 
 _PRIM_LG = {
     "Bool": 0,

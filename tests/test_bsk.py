@@ -15,6 +15,7 @@ import pytest
 from finchspark.api import Sketch
 from finchspark.kernels import FilterParams, KmerCounts, SketchParams
 from finchspark.sources.bsk import read_bsk_bytes, write_bsk_bytes
+from tests.capnp_schema import FINCH_SCHEMA, requires_schema
 
 
 def _mk(name="s", n=5, seed=0, **pkw):
@@ -136,6 +137,7 @@ def test_spark_shard_roundtrip_matches_signature_stage(spark, tmp_path):
     assert a == b
 
 
+@requires_schema(FINCH_SCHEMA)
 def test_bsk_decodes_under_reference_schema():
     """Writer bytes decoded by an INDEPENDENT schema-driven reader whose
     field layout is computed mechanically from the reference's frozen
@@ -143,7 +145,7 @@ def test_bsk_decodes_under_reference_schema():
     layout to the schema instead of to its own constants."""
     from tests.capnp_schema import SchemaDecoder
 
-    schema = open("/root/reference/lib/src/serialization/finch.capnp").read()
+    schema = open(FINCH_SCHEMA).read()
     sks = [
         _mk("alpha", 4, 5, sketch_type="scaled", scale=0.5, hash_seed=7,
             kmers_to_sketch=64, final_size=32),

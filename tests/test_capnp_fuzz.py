@@ -13,6 +13,14 @@ far-pointer tests hand-frame the same messages into 2- and 3-segment forms
 (single-far and double-far roots per the encoding spec) and require the
 production reader to decode them identically — the spec paths a
 single-segment writer can never exercise on its own output.
+
+The two schema-decode fuzzes read the schemas from a finch-rs checkout
+(`tests.capnp_schema.SCHEMA_DIR`) and run only where its
+`lib/src/serialization/{finch,mash}.capnp` is present; each is skipped,
+naming the absent path, elsewhere. No schema text is vendored: rebuilding
+it from the codec's own comments would pin the codec to itself, the
+circular check the independent decoder exists to avoid. The far-pointer
+fuzz needs no schema and always runs.
 """
 import struct
 
@@ -24,9 +32,7 @@ from finchspark.api import Sketch
 from finchspark.kernels import FilterParams, KmerCounts, SketchParams
 from finchspark.sources.bsk import read_bsk_bytes, write_bsk_bytes
 from finchspark.sources.mash import read_msh_bytes, write_msh_bytes
-
-_FINCH_SCHEMA = open("/root/reference/lib/src/serialization/finch.capnp").read()
-_MASH_SCHEMA = open("/root/reference/lib/src/serialization/mash.capnp").read()
+from tests.capnp_schema import FINCH_SCHEMA, MASH_SCHEMA, requires_schema
 
 
 @st.composite
@@ -93,6 +99,7 @@ def _assert_roundtrip(sks, back):
         assert (a.seq_length, a.num_valid_kmers) == (b.seq_length, b.num_valid_kmers)
 
 
+@requires_schema(FINCH_SCHEMA)
 @settings(max_examples=120, deadline=None)
 @given(st.lists(_sketch(), max_size=4))
 def test_fuzz_bsk_schema_decode_and_roundtrip(sks):
@@ -101,7 +108,8 @@ def test_fuzz_bsk_schema_decode_and_roundtrip(sks):
 
     from tests.capnp_schema import SchemaDecoder
 
-    ms = SchemaDecoder(data, _FINCH_SCHEMA).root("Multisketch")
+    schema = open(FINCH_SCHEMA).read()
+    ms = SchemaDecoder(data, schema).root("Multisketch")
     assert len(ms["sketches"]) == len(sks)
     for s, d in zip(sks, ms["sketches"]):
         assert d["name"] == s.name
@@ -135,6 +143,7 @@ def test_fuzz_bsk_schema_decode_and_roundtrip(sks):
                 assert d["filterParams"]["highAbunFilter"] == fp.abun_filter_high
 
 
+@requires_schema(MASH_SCHEMA)
 @settings(max_examples=100, deadline=None)
 @given(st.data())
 def test_fuzz_msh_schema_decode_and_roundtrip(data_st):
@@ -154,7 +163,8 @@ def test_fuzz_msh_schema_decode_and_roundtrip(data_st):
 
     from tests.capnp_schema import SchemaDecoder
 
-    mh = SchemaDecoder(data, _MASH_SCHEMA).root("MinHash")
+    schema = open(MASH_SCHEMA).read()
+    mh = SchemaDecoder(data, schema).root("MinHash")
     assert mh["kmerSize"] == params.kmer_length
     assert mh["hashSeed"] == params.hash_seed  # stored XOR 42, default round-trips
     # writer floors the field at 1 (mash's sketch-size slot is never 0)

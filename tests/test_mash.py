@@ -7,6 +7,7 @@ import numpy as np
 from finchspark.api import Sketch
 from finchspark.kernels import KmerCounts, SketchParams
 from finchspark.sources.mash import read_msh_bytes, write_msh_bytes
+from tests.capnp_schema import MASH_SCHEMA, requires_schema
 
 
 def _mk(name="m", n=6, seed=0):
@@ -77,13 +78,14 @@ def test_msh_counts_absent_defaults_to_one():
     assert (back[0].hashes.hashes == sk.hashes.hashes).all()
 
 
+@requires_schema(MASH_SCHEMA)
 def test_msh_decodes_under_reference_schema():
     """Writer bytes decoded by the independent schema-driven reader
     (layout derived from the reference's mash.capnp, including the
     out-of-declaration-order ordinals and the hashSeed=42 XOR default)."""
     from tests.capnp_schema import SchemaDecoder
 
-    schema = open("/root/reference/lib/src/serialization/mash.capnp").read()
+    schema = open(MASH_SCHEMA).read()
     sks = [_mk("one", 5, 1), _mk("two", 0, 2)]
     for s in sks:
         s.params = SketchParams(sketch_type="mash", kmer_length=21, hash_seed=7)
