@@ -542,10 +542,7 @@ def _q_cc_incremental_full(spark, sf):
     oracle as `cc_exact`). This is the exactness claim
     `neardup_stream(components_path=...)` relies on, proven on driver data
     end-to-end rather than only property-tested."""
-    from finchspark.operators.cc import (
-        connected_components,
-        connected_components_incremental,
-    )
+    from finchspark.operators.cc import connected_components_incremental
 
     pairs = _q_near_dup_pairs_full(spark, sf).select(
         F.col("key_a").alias("src"), F.col("key_b").alias("dst")
@@ -555,11 +552,7 @@ def _q_cc_incremental_full(spark, sf):
         ep = pairs.filter(
             F.pmod(F.col("src") + F.col("dst"), F.lit(3)) == epoch
         )
-        prev = (
-            connected_components(ep)
-            if prev is None
-            else connected_components_incremental(prev, ep)
-        )
+        prev, _ = connected_components_incremental(prev, ep)
     return prev
 
 
@@ -631,10 +624,7 @@ def _q_cc_incremental_capped(spark, sf):
 
     from finchspark.config import PipelineConfig
     from finchspark.kernels import SketchParams
-    from finchspark.operators.cc import (
-        connected_components,
-        connected_components_incremental,
-    )
+    from finchspark.operators.cc import connected_components_incremental
     from finchspark.operators.lsh import (
         candidate_pairs_incremental,
         exact_dup_pairs_sha,
@@ -704,11 +694,7 @@ def _q_cc_incremental_capped(spark, sf):
             .unionByName(exact_dup_pairs_sha(store, key_col="doc_id"))
             .select(F.col("key_a").alias("src"), F.col("key_b").alias("dst"))
         )
-        prev = (
-            connected_components(edges)
-            if prev is None
-            else connected_components_incremental(prev, edges)
-        )
+        prev, _ = connected_components_incremental(prev, edges)
     return prev
 
 

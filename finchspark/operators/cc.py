@@ -242,17 +242,21 @@ def connected_components(
     )
 
 
+# broadcast the remap only when the epoch's projected edge count bounds it
+# safely: remap rows <= distinct delta endpoints <= 2 x projected edges, so
+# 1M edges caps the broadcast at ~2M (long,long) rows (~32 MB per executor)
+_BROADCAST_REMAP_MAX_EDGES = 1_000_000
+
+
 def connected_components_incremental(
-    prev: DataFrame,
-    new_edges: DataFrame,
-    **cc_kwargs,
-) -> DataFrame:
-    """Incrementally maintained component map: given `prev` = (node,
-    component) from the corpus so far and `new_edges` = (src, dst) involving
-    at least one new member (the incremental LSH stage's contract,
-    `lsh.candidate_pairs_incremental`), return the exact (node, component)
-    map of the UNION graph — per-epoch cost bounded by the delta, never a
-    full recompute.
+    prev: DataFrame | None, new_edges: DataFrame
+) -> tuple[DataFrame, DataFrame]:
+    """(full, changed): fold `new_edges` = (src, dst) into `prev` = (node,
+    component), the map of the corpus so far, or None before the first
+    epoch (then both are `connected_components(new_edges)`). `full` is the
+    exact map of the UNION graph at a per-epoch cost bounded by the delta,
+    never a full recompute; `changed` holds the nodes first clustered this
+    epoch and the previously clustered nodes whose label moved.
 
     Method: contract every previous component to its representative
     (component id == min member id), project the new edges onto
@@ -268,52 +272,25 @@ def connected_components_incremental(
     miss). Property-tested against a full recompute over random epoch splits
     (tests/test_cc.py).
 
-    Shuffle budget per epoch: two broadcast-friendly joins of the delta
-    edges against `prev` (Catalyst broadcasts `prev` projections under
-    AQE when small; at 10^12-node scale the join keys are only the delta's
-    endpoints, so a storage layer with point lookups — Iceberg + bucketed
-    `prev` — keeps this O(|delta|)), one CC over the contracted delta graph
-    (O(log |delta|) rounds), one join to remap touched components.
+    `changed` is bounded by the total size of the delta-touched components,
+    never the corpus, and it is precisely the row set a storage-level MERGE
+    (or a delta-file write) needs: applying it over `prev` (override by
+    node) reproduces `full` exactly
+    (tests/test_cc.py::test_cc_incremental_delta_rows).
+
+    Broadcast guard: the remap is delta-bounded (touched reps + new nodes)
+    while `prev` is the whole corpus map, so the remap is broadcast and
+    `prev` is never shuffled — at 10^12-node scale that shuffle would dwarf
+    the epoch. A bulk epoch (initial backfill, large catch-up batch) can make
+    the delta corpus-sized, and forcing the broadcast would OOM the
+    executors, so it is broadcast only when the projected edge count is at
+    most `_BROADCAST_REMAP_MAX_EDGES`. The projected edges are
+    localCheckpointed and counted once; the delta CC reads the materialized
+    blocks instead of re-running the caller's upstream plan.
     """
-    full, _ = connected_components_incremental_delta(prev, new_edges, **cc_kwargs)
-    return full
-
-
-# broadcast the remap only when the epoch's edge count bounds it safely:
-# remap rows <= distinct delta endpoints <= 2 x |new_edges|, so 1M edges
-# caps the broadcast at ~2M (long,long) rows (~32 MB per executor)
-_BROADCAST_REMAP_MAX_EDGES = 1_000_000
-
-
-def connected_components_incremental_delta(
-    prev: DataFrame,
-    new_edges: DataFrame,
-    broadcast_remap: bool | None = None,
-    **cc_kwargs,
-) -> tuple[DataFrame, DataFrame]:
-    """(full_map, changed): the incremental fold of
-    `connected_components_incremental` plus the exact CHANGED row set —
-    nodes first clustered this epoch, and previously clustered nodes whose
-    component label moved. `changed` is bounded by the total size of the
-    delta-touched components, never the corpus, and it is precisely the
-    row set a storage-level MERGE (or a delta-file write) needs to bring
-    the previous persisted map up to date: applying `changed` over `prev`
-    (override by node) reproduces `full_map` exactly
-    (tests/test_cc.py::test_cc_incremental_delta_rows)."""
-    # Auto-sizing the remap broadcast needs an edge count — a full action.
-    # Materialize the delta edges ONCE up front (eager localCheckpoint) so
-    # the count, the endpoint projection, and the delta CC all read the
-    # materialized blocks instead of re-executing the caller's upstream plan
-    # (LSH + verify) once per consumer; the blocks are delta-bounded and the
-    # ContextCleaner frees them when the checkpointed RDD goes out of scope.
-    # Callers that know their epoch shape (e.g. the streaming path, whose
-    # `kept` frame is already persisted) pass broadcast_remap explicitly and
-    # skip the materialization.
-    if broadcast_remap is None:
-        new_edges = new_edges.select("src", "dst").localCheckpoint(eager=True)
-        _n_edges = new_edges.count()
-    else:
-        _n_edges = None
+    if prev is None:
+        full = connected_components(new_edges)
+        return full, full
     # project endpoints onto previous representatives
     ra = prev.select(F.col("node").alias("src"), F.col("component").alias("__ra"))
     rb = prev.select(F.col("node").alias("dst"), F.col("component").alias("__rb"))
@@ -325,26 +302,19 @@ def connected_components_incremental_delta(
             F.coalesce("__ra", F.col("src")).alias("src"),
             F.coalesce("__rb", F.col("dst")).alias("dst"),
         )
+        .filter(F.col("src") != F.col("dst"))
+        .localCheckpoint(eager=False)
     )
-    delta = connected_components(proj, **cc_kwargs)
+    n_proj = proj.count()  # materializes the checkpoint
+    delta = connected_components(proj)
     # remap previous components whose representative was merged
     remap = delta.select(
         F.col("node").alias("component"), F.col("component").alias("__new")
     )
-    # remap is delta-bounded (touched reps + new nodes only) while prev is
-    # the whole corpus map: broadcast the small side explicitly so prev is
-    # NEVER shuffled — at 10^12-node scale that shuffle would dwarf the
-    # epoch; with the hint the remap is a map-side join over prev's
-    # existing layout. The hint is GUARDED: a bulk epoch (initial backfill,
-    # large catch-up batch) can make the delta corpus-sized, and forcing the
-    # broadcast would OOM the executors past Spark's own safety threshold.
-    # `broadcast_remap=None` decides from the epoch's edge count (computed
-    # once at function entry over the materialized delta edges);
-    # True/False overrides for callers that know their epoch shape.
-    if broadcast_remap is None:
-        broadcast_remap = _n_edges <= _BROADCAST_REMAP_MAX_EDGES
     joined = prev.join(
-        F.broadcast(remap) if broadcast_remap else remap, "component", "left"
+        F.broadcast(remap) if n_proj <= _BROADCAST_REMAP_MAX_EDGES else remap,
+        "component",
+        "left",
     )
     kept = joined.select(
         "node", F.coalesce("__new", F.col("component")).alias("component")

@@ -86,15 +86,16 @@ class TableStore:
             "_write_id", F.lit(write_id)
         )
         self._save(tagged, stage, mode)
-        out = self.read(stage)
+        # ONE read of the stage (each read infers the schema with a job)
+        # serves the returned frame, the metrics and the fallback count
+        raw = self._read_raw(stage)
         # per-partition metrics from the lineage tag: one distributed agg
         # over THIS write's rows only (filtered by _write_id — pushed to the
         # scan); the skew ratio (max/mean) is the signal a re-partitioning
         # decision needs before the next stage reads this one
         per_part = {
             int(r["_partition_id"]): r["n"]
-            for r in self._read_raw(stage)
-            .filter(F.col("_write_id") == write_id)
+            for r in raw.filter(F.col("_write_id") == write_id)
             .groupBy("_partition_id")
             .agg(F.count(F.lit(1)).alias("n"))
             .collect()
@@ -117,7 +118,7 @@ class TableStore:
             n = json.loads(meta_file.read_text()).get("row_count", 0) + n_this_write
             count_source = "folded"
         else:
-            n = self._read_raw(stage).count()
+            n = raw.count()
         n_parts = max(len(per_part), 1)
         mean = n_this_write / n_parts
         meta = {
@@ -141,7 +142,7 @@ class TableStore:
             meta["partition_rows"] = {str(k): v for k, v in sorted(per_part.items())}
         path.mkdir(parents=True, exist_ok=True)
         meta_file.write_text(json.dumps(meta, indent=1))
-        return out
+        return raw.drop("_partition_id", "_write_id")
 
     # storage backend hooks — subclasses swap ONLY these two (the lineage
     # tagging, metrics, params-hash gate and resume logic above are shared)

@@ -20,13 +20,17 @@ Storage: every write goes through one `plans.checkpoint.TableStore`
 inherits the store's params-hash resume gate and per-write lineage.
 Micro-batch progress is tracked by the Structured Streaming checkpoint, so a
 restart resumes at the failed epoch; the appends themselves are
-transactional only on a table format that makes them so (Iceberg/Delta) — a
-mid-epoch crash between the pairs append and the store append can duplicate
-that epoch's rows on parquet.
+transactional only on a table format that makes them so (Iceberg/Delta).
+An epoch writes its component map first, then its pairs, then its
+signatures, so an epoch that fails in the component step appends no pairs
+and retrying it cannot duplicate them (a retried component step folds the
+same edges again, which changes no label). The one window left is a crash
+between the pairs append and the store append: its retry appends that
+epoch's pairs again on parquet.
 
 Clustering: pass `components_path` for a CONTINUOUSLY-MAINTAINED component
 map — each epoch's verified pairs are contracted into the previous map via
-`cc.connected_components_incremental_delta` (provably identical to a full
+`cc.connected_components_incremental` (provably identical to a full
 recompute; per-epoch compute bounded by the delta, not the corpus). The map
 is a base table plus an append-only `<stage>_delta` changelog holding ONLY
 each epoch's changed rows (new nodes + relabelled members of touched
@@ -83,11 +87,11 @@ def store_latest_components(spark, table_store, stage: str):
             )
         return None, 0
     base = table_store.read(stage)
-    watermark = -1
-    if "folded_epoch" in base.columns:
-        row = base.select(F.max("folded_epoch").alias("w")).first()
-        watermark = row["w"] if row["w"] is not None else -1
-        base = base.drop("folded_epoch")
+    # -1 for an empty base (a first epoch without pairs)
+    watermark = base.select(
+        F.coalesce(F.max("folded_epoch"), F.lit(-1))
+    ).first()[0]
+    base = base.drop("folded_epoch")
     if not table_store.exists(delta_stage):
         return base, 0
     d = table_store.read(delta_stage).filter(F.col("epoch_id") > watermark)
@@ -124,11 +128,15 @@ def neardup_stream(
     """Start the incremental near-dup query.
 
     Per micro-batch: build signatures for the new documents → generate
-    candidates (new × store∪new) → exact-verify → append pairs with
-    `jaccard >= config.jaccard_threshold` to `pairs_path` → append the new
-    signatures to `store_path`. The pairs action runs BEFORE the store
-    append so the store-side read of this epoch never observes this epoch's
-    own rows twice.
+    candidates (new × store∪new) → exact-verify → fold the pairs with
+    `jaccard >= config.jaccard_threshold` into the component map (when
+    `components_path` is set) → append them to `pairs_path` → append the
+    new signatures to `store_path`. The pairs append runs AFTER the
+    component step, so a failure there appends no pairs and a retry cannot
+    duplicate them; a crash between the pairs append and the store append
+    is the one window in which a retry appends that epoch's pairs again
+    (module docstring). Both run BEFORE the store append so the store-side
+    read of this epoch never observes this epoch's own rows twice.
 
     `stream_df`: any streaming DataFrame carrying key_cols + content_col.
     With `available_now=True` the query drains what is currently available
@@ -171,40 +179,36 @@ def neardup_stream(
             # always cast("long"): F.lit(int) is int32 for small epochs, and
             # mixed int32/int64 parquet files for one column make the
             # vectorized reader schema-dependent on file listing order
-            tagged_pairs = kept.withColumn(
-                "epoch_id", F.lit(int(epoch_id)).cast("long")
-            )
-            table_store.write(pairs_path, tagged_pairs, mode="append")
+            epoch_l = F.lit(int(epoch_id)).cast("long")
             if components_path is not None:
-                from ..operators.cc import (
-                    connected_components,
-                    connected_components_incremental_delta,
-                )
+                from ..operators.cc import connected_components_incremental
 
-                edges = kept.select(
-                    F.col("key_a").alias("src"), F.col("key_b").alias("dst")
-                )
-                # kept is persisted and already materialized by the pairs
-                # write, so this count is a cheap cache scan — deciding the
-                # remap broadcast here lets the incremental CC skip its own
-                # eager localCheckpoint + count materialization per epoch
-                # (cc.connected_components_incremental_delta docstring)
-                n_edges = kept.count()
                 delta_stage = f"{components_path}_delta"
                 prev, n_delta = store_latest_components(
                     spark, table_store, components_path
                 )
-                epoch_l = F.lit(int(epoch_id)).cast("long")
-                if prev is None:
-                    full = connected_components(edges)
-                    # folded_epoch watermark rides IN the base table so it
-                    # commits atomically with the data (see
-                    # store_latest_components crash-safety note)
+                full, changed = connected_components_incremental(
+                    prev,
+                    kept.select(
+                        F.col("key_a").alias("src"), F.col("key_b").alias("dst")
+                    ),
+                )
+                if prev is None or n_delta + 1 >= compact_every:
+                    # first epoch or compaction: rewrite the base (carrying
+                    # the folded_epoch watermark in the same commit), then
+                    # truncate the changelog to empty with the final schema.
+                    # A crash between the two writes is safe: leftover delta
+                    # rows all have epoch_id <= the new watermark and are
+                    # ignored on the next fold (store_latest_components).
+                    # localCheckpoint breaks the plan's lineage through the
+                    # table being replaced (real Iceberg pins the read
+                    # snapshot; a parquet-backed store would otherwise read
+                    # its own overwrite)
+                    full = full.localCheckpoint(eager=True)
                     table_store.write(
                         components_path,
                         full.withColumn("folded_epoch", epoch_l),
                     )
-                    # initialize the changelog empty with the final schema
                     table_store.write(
                         delta_stage,
                         full.limit(0).withColumn(
@@ -212,42 +216,18 @@ def neardup_stream(
                         ),
                     )
                 else:
-                    from ..operators.cc import _BROADCAST_REMAP_MAX_EDGES
-
-                    full, changed = connected_components_incremental_delta(
-                        prev,
-                        edges,
-                        broadcast_remap=n_edges <= _BROADCAST_REMAP_MAX_EDGES,
+                    table_store.write(
+                        delta_stage,
+                        changed.localCheckpoint(eager=True).withColumn(
+                            "epoch_id", epoch_l
+                        ),
+                        mode="append",
                     )
-                    if n_delta + 1 >= compact_every:
-                        # compaction: rewrite the base (carrying the new
-                        # folded_epoch watermark in the same commit), then
-                        # truncate the changelog. A crash between the two
-                        # writes is safe: leftover delta rows all have
-                        # epoch_id <= the new watermark and are ignored on
-                        # the next fold. localCheckpoint breaks the plan's
-                        # lineage through the table being replaced (real
-                        # Iceberg pins the read snapshot; a parquet-backed
-                        # store would otherwise read its own overwrite)
-                        full = full.localCheckpoint(eager=True)
-                        table_store.write(
-                            components_path,
-                            full.withColumn("folded_epoch", epoch_l),
-                        )
-                        table_store.write(
-                            delta_stage,
-                            full.limit(0).withColumn(
-                                "epoch_id", F.lit(0).cast("long")
-                            ),
-                        )
-                    else:
-                        table_store.write(
-                            delta_stage,
-                            changed.localCheckpoint(eager=True).withColumn(
-                                "epoch_id", epoch_l
-                            ),
-                            mode="append",
-                        )
+            # pairs append AFTER the component step, so an epoch that fails
+            # there appends nothing and its retry cannot duplicate pairs
+            table_store.write(
+                pairs_path, kept.withColumn("epoch_id", epoch_l), mode="append"
+            )
             table_store.write(store_path, new_sigs, mode="append")
         finally:
             # both caches released even when an append throws — foreachBatch

@@ -142,12 +142,10 @@ def test_cc_small_graph_path_equals_star_path(spark):
 
 
 def test_cc_incremental_delta_rows(spark):
-    """connected_components_incremental_delta's changed set: applying it
-    over prev (override by node) reproduces the full map exactly, and rows
-    of untouched components never appear in it."""
-    from finchspark.operators.cc import (
-        connected_components_incremental_delta,
-    )
+    """connected_components_incremental's changed set: applying it over
+    prev (override by node) reproduces the full map exactly, and rows of
+    untouched components never appear in it."""
+    from finchspark.operators.cc import connected_components_incremental
 
     prev = spark.createDataFrame(
         # components {1,2,3}->1, {10,11}->10, {20,21}->20 (untouched)
@@ -158,7 +156,7 @@ def test_cc_incremental_delta_rows(spark):
     edges = spark.createDataFrame(
         [(3, 5), (5, 10), (30, 31)], "src long, dst long"
     )
-    full, changed = connected_components_incremental_delta(prev, edges)
+    full, changed = connected_components_incremental(prev, edges)
     got_full = {(r["node"], r["component"]) for r in full.collect()}
     got_changed = {(r["node"], r["component"]) for r in changed.collect()}
     assert got_full == {
@@ -174,12 +172,13 @@ def test_cc_incremental_delta_rows(spark):
     assert {(n, c) for n, c in applied.items()} == got_full
 
 
-def test_cc_incremental_delta_broadcast_guard(spark):
-    """ADVICE r4: the remap broadcast is guarded, not forced — the
-    shuffle-join fallback (bulk epoch where a corpus-sized remap would OOM
-    the forced broadcast) returns the identical map/changed set, and with
-    broadcast_remap=False no BroadcastHashJoin touches the remap path."""
-    from finchspark.operators.cc import connected_components_incremental_delta
+def test_cc_incremental_delta_broadcast_guard(spark, monkeypatch):
+    """ADVICE r4: the remap broadcast is guarded, not forced. At the
+    default bound a small epoch broadcasts the remap; with the bound at 0
+    (a bulk epoch, where a corpus-sized remap would OOM a forced broadcast)
+    the plan carries no broadcast hint and the shuffle-join fallback
+    returns the identical map and changed set."""
+    from finchspark.operators import cc
 
     prev = spark.createDataFrame(
         [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (20, 20), (21, 20)],
@@ -188,16 +187,23 @@ def test_cc_incremental_delta_broadcast_guard(spark):
     edges = spark.createDataFrame(
         [(3, 5), (5, 10), (30, 31)], "src long, dst long"
     )
-    results = {}
-    for flag in (True, False, None):
-        full, changed = connected_components_incremental_delta(
-            prev, edges, broadcast_remap=flag
+
+    def run():
+        full, changed = cc.connected_components_incremental(prev, edges)
+        hinted = "ResolvedHint (strategy=broadcast)" in (
+            full._jdf.queryExecution().logical().toString()
         )
-        results[flag] = (
+        return hinted, (
             {(r["node"], r["component"]) for r in full.collect()},
             {(r["node"], r["component"]) for r in changed.collect()},
         )
-    assert results[True] == results[False] == results[None]
+
+    hinted, default = run()
+    assert hinted
+    monkeypatch.setattr(cc, "_BROADCAST_REMAP_MAX_EDGES", 0)
+    hinted, guarded = run()
+    assert not hinted
+    assert guarded == default
 
 
 @pytest.mark.parametrize("seed", [3, 17])
@@ -228,11 +234,7 @@ def test_cc_incremental_matches_full_recompute(spark, seed):
     for ep in epochs:
         seen.extend(ep)
         e = spark.createDataFrame(ep, "src long, dst long")
-        prev = (
-            connected_components(e)
-            if prev is None
-            else connected_components_incremental(prev, e)
-        )
+        prev, _ = connected_components_incremental(prev, e)
         got = {(r["node"], r["component"]) for r in prev.collect()}
         full = connected_components(
             spark.createDataFrame(seen, "src long, dst long")

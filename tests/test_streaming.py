@@ -270,7 +270,8 @@ def test_torn_compaction_raises(spark, cfg, tmp_path):
     no base: a parquet overwrite deletes the stage directory, its
     `_finch_meta.json` included. Folding must refuse loudly, and a retried
     epoch must fail rather than rebuild the base from its own edges alone
-    (which would silently drop every earlier label)."""
+    (which would silently drop every earlier label) and must append none
+    of its pairs however often it is restarted."""
     rows = _synth_rows(24)
     src = tmp_path / "incoming"
     ckpt = str(tmp_path / "ckpt")
@@ -291,9 +292,14 @@ def test_torn_compaction_raises(spark, cfg, tmp_path):
     assert "'components'" in str(err.value)
     assert "'components_delta'" in str(err.value)
 
-    with pytest.raises(Exception, match="torn compaction"):
-        run((rows[20:],)).awaitTermination(240)
+    # the failing epoch, then two restarts of it from the same checkpoint:
+    # each fails in the component step, before its pairs append
+    n_pairs = store.read("pairs").count()
+    for chunks in ((rows[20:],), (), ()):
+        with pytest.raises(Exception, match="torn compaction"):
+            run(chunks).awaitTermination(240)
     assert not store.exists("components")
+    assert store.read("pairs").count() == n_pairs
 
 
 def test_compaction_crash_window_is_noop(spark, tmp_path):
