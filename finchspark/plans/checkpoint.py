@@ -8,10 +8,18 @@ an Iceberg catalog — `df.writeTo(...).append()` — without touching pipeline
 code; this sandbox has no Iceberg runtime jars).
 
 Every stage directory carries a `_finch_meta.json` with (run_id, stage,
-params_hash, row_count, count_source). Resume REQUIRES the params_hash to
-match — a mismatch hard-fails, mirroring the reference's sketch-compatibility
-check (`SketchParams::check_compatibility`, `sketch_schemes/mod.rs:179-212`),
+params_hash, row_count, count_source), the per-partition split of the last
+write and the stage's schema. Resume REQUIRES the params_hash to match — a
+mismatch hard-fails, mirroring the reference's sketch-compatibility check
+(`SketchParams::check_compatibility`, `sketch_schemes/mod.rs:179-212`),
 instead of silently mixing sketches from different configs.
+
+A stage write is ONE Spark job, the save: its row count is observed on the
+save itself (`df.observe`) and its per-partition split is read from the
+save's task output metrics in Spark's status store. A stage read runs no
+job: it passes the schema recorded in the meta instead of inferring it
+(a meta written before the schema was recorded is read with inference). An
+append must match that pinned schema, nullability aside.
 """
 from __future__ import annotations
 
@@ -20,8 +28,9 @@ import time
 import uuid
 from pathlib import Path
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
+from pyspark.sql.types import StructType
 
 
 class ParamsMismatch(RuntimeError):
@@ -69,9 +78,21 @@ class TableStore:
     # full per-partition row map stored only up to this many partitions
     # (beyond it the summary stats still capture skew without bloating meta)
     _MAX_PARTITION_MAP = 4096
+    # bound on waiting for the status store to hold every task of a save
+    # (the listener bus feeds it asynchronously after the job has ended)
+    _SPLIT_WAIT_S = 30.0
 
     def write(self, stage: str, df: DataFrame, mode: str = "overwrite") -> DataFrame:
+        """Save `df` as `stage` in ONE Spark job (the save) and return the
+        stage read back lazily. The row count comes from an observation on
+        the save, the per-partition split from the save's task metrics."""
         path = self._dir(stage)
+        meta_file = path / "_finch_meta.json"
+        prev = (
+            json.loads(meta_file.read_text())
+            if mode == "append" and meta_file.exists()
+            else None
+        )
         # per-partition lineage: tag rows with the writing partition id AND a
         # per-write id so partition ids from separate append writes never
         # collide in the metrics (they'd otherwise conflate independent
@@ -85,40 +106,47 @@ class TableStore:
         tagged = df.withColumn("_partition_id", F.spark_partition_id()).withColumn(
             "_write_id", F.lit(write_id)
         )
-        self._save(tagged, stage, mode)
-        # ONE read of the stage (each read infers the schema with a job)
-        # serves the returned frame, the metrics and the fallback count
-        raw = self._read_raw(stage)
-        # per-partition metrics from the lineage tag: one distributed agg
-        # over THIS write's rows only (filtered by _write_id — pushed to the
-        # scan); the skew ratio (max/mean) is the signal a re-partitioning
-        # decision needs before the next stage reads this one
-        per_part = {
-            int(r["_partition_id"]): r["n"]
-            for r in raw.filter(F.col("_write_id") == write_id)
-            .groupBy("_partition_id")
-            .agg(F.count(F.lit(1)).alias("n"))
-            .collect()
-        }
-        n_this_write = sum(per_part.values())
+        # the schema a file source reads back: reads pass it instead of
+        # inferring it with a job. An append keeps the stage's pinned schema
+        # and must match it, else one column would hold files of two types
+        schema = _nullable(tagged.schema.jsonValue())
+        if prev is not None:
+            if "schema" in prev:
+                _check_append_schema(stage, prev["schema"], schema)
+            schema = prev.get("schema")
+        # a table with data but no meta was not written by this store: it is
+        # the one case that still counts its rows (after the save)
+        unmetered = mode == "append" and prev is None and self._table_exists(stage)
+        sc = df.sparkSession.sparkContext
+        obs = Observation()
+        # the tag finds the save's jobs in the status store (the job group
+        # may belong to a caller, e.g. a tracer)
+        tag = f"finch-write-{uuid.uuid4().hex}"
+        sc.addJobTag(tag)
+        try:
+            self._save(tagged.observe(obs, F.count(F.lit(1)).alias("n")), stage, mode)
+        finally:
+            sc.removeJobTag(tag)
+        n_this_write = obs.get["n"]
+        # the skew ratio (max/mean) is the signal a re-partitioning decision
+        # needs before the next stage reads this one
+        per_part = _partition_rows(sc, tag, n_this_write, self._SPLIT_WAIT_S)
+        raw = self._read_raw(stage, schema)
         # row_count stays the cumulative table count (append-aware). Fold
         # the previous meta's count instead of re-counting the table: every
         # write passes through this method, so prev row_count + this write
         # is exact — and a per-append full-table scan is O(store) per epoch
-        # on a streaming store (the count was the single largest fixed cost
-        # of a streaming epoch as the store grows). Fall back to a real
-        # count only for a table this store has no meta for. `count_source`
-        # says which: a folded count drifts if an append bypassed this
-        # method; the next overwrite (e.g. a compaction) counts it afresh.
-        meta_file = path / "_finch_meta.json"
+        # on a streaming store. `count_source` says which: a folded count
+        # drifts if an append bypassed this method; the next overwrite (e.g.
+        # a compaction) counts it afresh.
         count_source = "counted"
-        if mode != "append":
-            n = n_this_write
-        elif meta_file.exists():
-            n = json.loads(meta_file.read_text()).get("row_count", 0) + n_this_write
+        if prev is not None:
+            n = prev.get("row_count", 0) + n_this_write
             count_source = "folded"
-        else:
+        elif unmetered:
             n = raw.count()
+        else:
+            n = n_this_write
         n_parts = max(len(per_part), 1)
         mean = n_this_write / n_parts
         meta = {
@@ -140,21 +168,31 @@ class TableStore:
         }
         if len(per_part) <= self._MAX_PARTITION_MAP:
             meta["partition_rows"] = {str(k): v for k, v in sorted(per_part.items())}
+        if schema is not None:
+            meta["schema"] = schema
         path.mkdir(parents=True, exist_ok=True)
         meta_file.write_text(json.dumps(meta, indent=1))
         return raw.drop("_partition_id", "_write_id")
 
-    # storage backend hooks — subclasses swap ONLY these two (the lineage
+    # storage backend hooks — subclasses swap ONLY these three (the lineage
     # tagging, metrics, params-hash gate and resume logic above are shared)
     def _save(self, tagged: DataFrame, stage: str, mode: str) -> None:
         tagged.write.mode(mode).format(self.fmt).save(str(self._dir(stage)))
 
-    def _read_raw(self, stage: str) -> DataFrame:
-        spark = SparkSession.getActiveSession()
-        return spark.read.format(self.fmt).load(str(self._dir(stage)))
+    def _read_raw(self, stage: str, schema: dict | None) -> DataFrame:
+        reader = SparkSession.getActiveSession().read.format(self.fmt)
+        if schema is not None:
+            reader = reader.schema(StructType.fromJson(schema))
+        return reader.load(str(self._dir(stage)))
+
+    def _table_exists(self, stage: str) -> bool:
+        return self._dir(stage).exists()
 
     def read(self, stage: str) -> DataFrame:
-        return self._read_raw(stage).drop("_partition_id", "_write_id")
+        meta = self._dir(stage) / "_finch_meta.json"
+        # a stage written without a recorded schema is read with inference
+        schema = json.loads(meta.read_text()).get("schema") if meta.exists() else None
+        return self._read_raw(stage, schema).drop("_partition_id", "_write_id")
 
     def read_meta(self, stage: str) -> dict:
         return json.loads((self._dir(stage) / "_finch_meta.json").read_text())
@@ -165,6 +203,74 @@ class TableStore:
         if self.exists(stage):
             return self.read(stage)
         return self.write(stage, compute())
+
+
+def _nullable(t):
+    """A DataType's JSON value with every field, array element and map
+    value nullable: the schema a file source reads the data back as."""
+    if isinstance(t, list):
+        return [_nullable(v) for v in t]
+    if not isinstance(t, dict):
+        return t
+    t = {k: v if k == "metadata" else _nullable(v) for k, v in t.items()}
+    for k in ("nullable", "containsNull", "valueContainsNull"):
+        if k in t:
+            t[k] = True
+    return t
+
+
+def _check_append_schema(stage: str, pinned: dict, got: dict) -> None:
+    """Raise unless an append's columns have the pinned names and types
+    (both in nullable form, so nullability is ignored)."""
+    want = {f.name: f.dataType for f in StructType.fromJson(pinned).fields}
+    have = {f.name: f.dataType for f in StructType.fromJson(got).fields}
+    diff = [
+        f"{c}: {want[c].simpleString() if c in want else '(absent)'} -> "
+        f"{have[c].simpleString() if c in have else '(absent)'}"
+        for c in sorted(want.keys() | have.keys())
+        if want.get(c) != have.get(c)
+    ]
+    if diff:
+        raise ValueError(
+            f"append to stage '{stage}' does not match its pinned schema "
+            f"(pinned -> appended): {'; '.join(diff)}"
+        )
+
+
+def _partition_rows(sc, tag: str, expected: int, wait_s: float) -> dict[int, int]:
+    """{partition id: rows written} over the successful tasks of the jobs
+    tagged `tag`, from their output metrics in Spark's status store; only
+    partitions that wrote rows are listed. The listener bus feeds the store
+    asynchronously, so this re-reads it until the split sums to `expected`
+    (the save's observed count) and raises if that takes over `wait_s`."""
+    jsc = sc._jsc.sc()
+    status = jsc.statusStore()
+    deadline = time.monotonic() + wait_s
+    while True:
+        rows = {}
+        for job in jsc.statusTracker().getJobIdsForTag(tag):
+            stages = status.job(job).stageIds()
+            for i in range(stages.size()):
+                stage = stages.apply(i)
+                for attempt in range(status.lastStageAttempt(stage).attemptId() + 1):
+                    tasks = status.taskList(stage, attempt, 2**31 - 1).iterator()
+                    while tasks.hasNext():
+                        t = tasks.next()
+                        m = t.taskMetrics()
+                        if t.status() != "SUCCESS" or m.isEmpty():
+                            continue
+                        n = m.get().outputMetrics().recordsWritten()
+                        if n:
+                            rows[t.partitionId()] = n
+        got = sum(rows.values())
+        if got == expected:
+            return rows
+        if time.monotonic() > deadline:
+            raise RuntimeError(
+                f"status store split of write '{tag}' sums to {got} rows, "
+                f"the save observed {expected} (waited {wait_s} s)"
+            )
+        time.sleep(0.01)
 
 
 class IcebergTableStore(TableStore):
@@ -206,14 +312,18 @@ class IcebergTableStore(TableStore):
         return f"{self.namespace}.{stage}"
 
     def _save(self, tagged: DataFrame, stage: str, mode: str) -> None:
-        spark = SparkSession.getActiveSession()
         writer = tagged.writeTo(self.table_name(stage)).using(self.fmt)
         # append to a missing table must create it (first write of a run)
-        if mode == "append" and spark.catalog.tableExists(self.table_name(stage)):
+        if mode == "append" and self._table_exists(stage):
             writer.append()
         else:
             writer.createOrReplace()
 
-    def _read_raw(self, stage: str) -> DataFrame:
-        spark = SparkSession.getActiveSession()
-        return spark.read.table(self.table_name(stage))
+    def _read_raw(self, stage: str, schema: dict | None) -> DataFrame:
+        # the catalog holds the table's schema: reading it runs no job
+        return SparkSession.getActiveSession().read.table(self.table_name(stage))
+
+    def _table_exists(self, stage: str) -> bool:
+        return SparkSession.getActiveSession().catalog.tableExists(
+            self.table_name(stage)
+        )

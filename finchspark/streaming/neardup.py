@@ -177,8 +177,8 @@ def neardup_stream(
                 F.col("jaccard") >= config.jaccard_threshold
             ).persist()
             # always cast("long"): F.lit(int) is int32 for small epochs, and
-            # mixed int32/int64 parquet files for one column make the
-            # vectorized reader schema-dependent on file listing order
+            # the store refuses an append whose types differ from the
+            # stage's pinned schema (one column in int32 and int64 files)
             epoch_l = F.lit(int(epoch_id)).cast("long")
             if components_path is not None:
                 from ..operators.cc import connected_components_incremental

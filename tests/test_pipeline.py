@@ -1,5 +1,7 @@
 """End-to-end near-duplicate pipeline: recall vs brute-force reference,
 cluster assignment parity, checkpoint/resume semantics."""
+import uuid
+
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -294,6 +296,111 @@ def test_tablestore_write_id_unique_across_resume(spark, cfg, tmp_path):
     assert meta["n_partitions"] == 2
 
 
+def _jobs_run(spark, fn):
+    """(Spark jobs `fn` ran, its result), counted through the status
+    tracker under a job group of its own."""
+    sc = spark.sparkContext
+    group = f"job-count-{uuid.uuid4().hex}"
+    sc.setJobGroup(group, group)
+    try:
+        out = fn()
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+    # the status store is fed by the listener bus: drain it before counting
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    return len(sc.statusTracker().getJobIdsForGroup(group)), out
+
+
+def test_tablestore_one_job_per_write(spark, cfg, tmp_path):
+    """A stage write is one Spark job (the save: the row count is observed
+    on it, the per-partition split read from its task metrics) and a stage
+    read is none (the schema comes from the meta, not from inference)."""
+    store = TableStore(tmp_path / "store", cfg.params_hash())
+    df = spark.range(1000).repartition(3).persist()
+    df.count()
+    try:
+        assert _jobs_run(spark, lambda: store.write("s", df))[0] == 1
+        assert _jobs_run(spark, lambda: store.write("s", df, mode="append"))[0] == 1
+        assert _jobs_run(spark, lambda: store.write("t", df, mode="append"))[0] == 1
+        meta = store.read_meta("t")
+        assert (meta["row_count"], meta["count_source"]) == (1000, "counted")
+        assert sorted(meta["partition_rows"].values()) == [333, 333, 334]
+        assert _jobs_run(spark, lambda: store.read("s"))[0] == 0
+        n, got = _jobs_run(spark, lambda: store.get_or_compute("s", lambda: 1 / 0))
+        assert n == 0 and got.columns == ["id"]
+        assert store.read_meta("s")["row_count"] == got.count() == 2000
+    finally:
+        df.unpersist()
+
+
+def test_tablestore_append_must_match_pinned_schema(spark, cfg, tmp_path):
+    """An append whose column types differ from the stage's pinned schema
+    (an int32 epoch id onto an int64 one) raises before writing anything;
+    nullability alone is no mismatch."""
+    store = TableStore(tmp_path / "store", cfg.params_hash())
+    store.write("s", spark.range(10).withColumn("epoch_id", F.lit(0).cast("long")))
+    store.write(
+        "s",
+        spark.createDataFrame([(10, 1)], "id long not null, epoch_id long not null"),
+        mode="append",
+    )
+    with pytest.raises(ValueError, match=r"stage 's'.*epoch_id: bigint -> int"):
+        store.write(
+            "s", spark.range(20, 25).withColumn("epoch_id", F.lit(2)), mode="append"
+        )
+    extra = spark.range(1).withColumn("epoch_id", F.lit(3).cast("long"))
+    with pytest.raises(ValueError, match=r"extra: \(absent\) -> string"):
+        store.write("s", extra.withColumn("extra", F.lit("x")), mode="append")
+    assert store.read_meta("s")["row_count"] == store.read("s").count() == 11
+
+
+def test_tablestore_meta_edge_frames(spark, cfg, tmp_path):
+    """An empty write lists no partition; a frame with empty partitions
+    lists only those that wrote rows."""
+    store = TableStore(tmp_path / "store", cfg.params_hash())
+    store.write("empty", spark.range(0))
+    meta = store.read_meta("empty")
+    assert (meta["n_partitions"], meta["partition_skew"]) == (0, 0.0)
+    assert (meta["row_count"], meta["partition_rows"]) == (0, {})
+    assert store.read("empty").count() == 0
+    store.write("sparse", spark.range(3).repartition(8))
+    meta = store.read_meta("sparse")
+    assert meta["n_partitions"] == len(meta["partition_rows"]) < 8
+    assert sum(meta["partition_rows"].values()) == meta["write_row_count"] == 3
+    assert all(v > 0 for v in meta["partition_rows"].values())
+
+
+def test_tablestore_meta_without_schema_is_inferred(spark, cfg, tmp_path):
+    """A stage whose meta records no schema (written before the store
+    recorded it) is read with inference, and appends to it are unchecked."""
+    import json
+
+    store = TableStore(tmp_path / "store", cfg.params_hash())
+    store.write("s", spark.range(5))
+    meta_file = tmp_path / "store" / "s" / "_finch_meta.json"
+    meta = json.loads(meta_file.read_text())
+    del meta["schema"]
+    meta_file.write_text(json.dumps(meta))
+    assert store.read("s").columns == ["id"]
+    store.write("s", spark.range(5, 8), mode="append")
+    assert "schema" not in store.read_meta("s")
+    assert store.read_meta("s")["row_count"] == store.read("s").count() == 8
+
+
+def test_tablestore_read_schema_is_inferred_schema(spark, cfg, tmp_path):
+    """The schema a stage read passes instead of inferring equals what
+    parquet inference returns, for every pipeline stage."""
+    rows = [(i, f"def f{i % 3}(x):\n    return x * {i % 3} + 1\n" * 4) for i in range(12)]
+    docs = spark.createDataFrame(rows, "doc_id long, content string")
+    store = TableStore(tmp_path / "store", cfg.params_hash())
+    near_duplicates(docs, cfg, store=store)
+    for stage in ("signatures", "pairs", "components"):
+        inferred = spark.read.parquet(str(tmp_path / "store" / stage))
+        assert store.read(stage).schema == inferred.drop(
+            "_partition_id", "_write_id"
+        ).schema, stage
+
+
 def _fake_v2_catalog(spark, tmp_path, monkeypatch):
     """Mock a V2 catalog with a parquet-backed fake recording each
     DataFrameWriterV2 call; returns (calls, tables). Patches the CONCRETE
@@ -357,6 +464,7 @@ def test_iceberg_store_v2_calls(spark, cfg, tmp_path, monkeypatch):
     meta = store.read_meta("signatures")
     assert meta["row_count"] == 60 and meta["write_row_count"] == 10
     assert meta["n_partitions"] == 2
+    assert sum(meta["partition_rows"].values()) == meta["write_row_count"]
 
     ran = {"compute": False}
 
