@@ -30,8 +30,12 @@ Scale notes:
 from __future__ import annotations
 
 import numpy as np
-from pyspark.sql import DataFrame
+from pyspark.sql import DataFrame, Observation
 from pyspark.sql import functions as F
+
+# graphs with at most this many edge rows (4M, about 64 MB of keys: far
+# below executor memory) are labelled in one task by `_single_task_cc`
+SMALL_GRAPH_MAX_EDGES = 1 << 22
 
 
 def cc_labels_numpy(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -65,7 +69,8 @@ def _single_task_cc(edges: DataFrame) -> DataFrame:
     partition and label with `cc_labels_numpy`. The edge list of a near-dup
     graph is tiny relative to the corpus (it only holds duplicate relations),
     so this path covers the common case with ONE job instead of O(log n)
-    shuffle rounds; the guard in `connected_components` bounds its size."""
+    shuffle rounds; the guards in `connected_components` and
+    `connected_components_incremental` bound its size."""
     import pandas as pd
 
     key_type = edges.schema["src"].dataType.simpleString()
@@ -154,15 +159,15 @@ def connected_components(
     check_every: int = 2,
     salt_buckets: int = 0,
     checkpoint_dir: str | None = None,
-    small_graph_threshold: int | None = 1 << 22,
+    small_graph_threshold: int | None = SMALL_GRAPH_MAX_EDGES,
 ) -> DataFrame:
     """Return (node, component) where component = min node id reachable.
 
     `edges` must have two numeric/orderable columns; self-loops and
     duplicates are tolerated. Empty edge input returns an empty frame.
 
-    Graphs with at most `small_graph_threshold` edge rows (default 4M ≈
-    64 MB of keys — far below executor memory) skip the star rounds and are
+    Graphs with at most `small_graph_threshold` edge rows (default
+    `SMALL_GRAPH_MAX_EDGES`) skip the star rounds and are
     labeled in ONE single-task job: a near-dup edge list is tiny relative to
     the corpus, and the iterative path costs O(log n) shuffle rounds of job
     latency even on 25 edges. The edge count that guards this reuses the
@@ -260,9 +265,10 @@ def connected_components_incremental(
 
     Method: contract every previous component to its representative
     (component id == min member id), project the new edges onto
-    representatives (nodes unknown to `prev` project to themselves), run the
-    batch CC on that DELTA GRAPH only, then remap previous assignments
-    through the delta result and append newly clustered nodes.
+    representatives (nodes unknown to `prev` project to themselves), label
+    that DELTA GRAPH only (in one task up to `SMALL_GRAPH_MAX_EDGES` edges,
+    else by the star rounds), then remap previous assignments through the
+    delta result and append newly clustered nodes.
 
     EXACTNESS (not an approximation): component ids are min member ids, so
     each prev rep is the min of its members; the delta CC's label for a
@@ -284,9 +290,14 @@ def connected_components_incremental(
     the epoch. A bulk epoch (initial backfill, large catch-up batch) can make
     the delta corpus-sized, and forcing the broadcast would OOM the
     executors, so it is broadcast only when the projected edge count is at
-    most `_BROADCAST_REMAP_MAX_EDGES`. The projected edges are
-    localCheckpointed and counted once; the delta CC reads the materialized
-    blocks instead of re-running the caller's upstream plan.
+    most `_BROADCAST_REMAP_MAX_EDGES`.
+
+    Driver actions: the projected edges are materialized and counted once,
+    by an eager localCheckpoint carrying an `Observation`, so the delta CC
+    reads the materialized blocks instead of re-running the caller's
+    upstream plan. The delta labels are checkpointed lazily: the first job
+    that reads them (for the remap or the new-node anti-join) labels the
+    delta graph, and the other reader reads the same blocks.
     """
     if prev is None:
         full = connected_components(new_edges)
@@ -303,10 +314,17 @@ def connected_components_incremental(
             F.coalesce("__rb", F.col("dst")).alias("dst"),
         )
         .filter(F.col("src") != F.col("dst"))
-        .localCheckpoint(eager=False)
     )
-    n_proj = proj.count()  # materializes the checkpoint
-    delta = connected_components(proj)
+    seen = Observation()
+    proj = proj.observe(seen, F.count(F.lit(1)).alias("n")).localCheckpoint(
+        eager=True
+    )
+    n_proj = seen.get["n"]
+    delta = (
+        _single_task_cc(proj)
+        if n_proj <= SMALL_GRAPH_MAX_EDGES
+        else connected_components(proj, small_graph_threshold=None)
+    ).localCheckpoint(eager=False)
     # remap previous components whose representative was merged
     remap = delta.select(
         F.col("node").alias("component"), F.col("component").alias("__new")

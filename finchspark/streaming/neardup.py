@@ -154,88 +154,81 @@ def neardup_stream(
 
     def _emit(batch_df: DataFrame, epoch_id: int) -> None:
         spark = batch_df.sparkSession
+        # the batch's signatures (read by the probe, verify and the store
+        # append) and the kept pairs (read by the CC and the pairs append)
+        # are each computed once, by an eager localCheckpoint: one job whose
+        # AQE-coalesced shuffles run the Python UDF in few tasks. A persist()
+        # keeps all shuffle partitions of the cached plan (one Python task
+        # each) and is built by one job per reader. Spark's ContextCleaner
+        # frees the blocks at the first driver GC after the frames become
+        # unreachable, as for the component map's checkpoints.
         new_sigs = build_signatures(
             batch_df,
             config,
             key_cols=key_cols,
             content_col=content_col,
             filters=filters,
-        ).persist()
-        kept = None
-        try:
-            have_store = table_store.exists(store_path)
-            all_sigs = (
-                table_store.read(store_path).unionByName(new_sigs)
-                if have_store
-                else new_sigs
-            )
-            cands = candidate_pairs_incremental(
-                new_sigs, all_sigs, config.lsh, key_col
-            )
-            pairs = verify_pairs(cands, all_sigs, config, key_col=key_col)
-            kept = pairs.filter(
-                F.col("jaccard") >= config.jaccard_threshold
-            ).persist()
-            # always cast("long"): F.lit(int) is int32 for small epochs, and
-            # the store refuses an append whose types differ from the
-            # stage's pinned schema (one column in int32 and int64 files)
-            epoch_l = F.lit(int(epoch_id)).cast("long")
-            if components_path is not None:
-                from ..operators.cc import connected_components_incremental
+        ).localCheckpoint(eager=True)
+        have_store = table_store.exists(store_path)
+        all_sigs = (
+            table_store.read(store_path).unionByName(new_sigs)
+            if have_store
+            else new_sigs
+        )
+        cands = candidate_pairs_incremental(new_sigs, all_sigs, config.lsh, key_col)
+        pairs = verify_pairs(cands, all_sigs, config, key_col=key_col)
+        kept = pairs.filter(
+            F.col("jaccard") >= config.jaccard_threshold
+        ).localCheckpoint(eager=True)
+        # always cast("long"): F.lit(int) is int32 for small epochs, and
+        # the store refuses an append whose types differ from the
+        # stage's pinned schema (one column in int32 and int64 files)
+        epoch_l = F.lit(int(epoch_id)).cast("long")
+        if components_path is not None:
+            from ..operators.cc import connected_components_incremental
 
-                delta_stage = f"{components_path}_delta"
-                prev, n_delta = store_latest_components(
-                    spark, table_store, components_path
-                )
-                full, changed = connected_components_incremental(
-                    prev,
-                    kept.select(
-                        F.col("key_a").alias("src"), F.col("key_b").alias("dst")
-                    ),
-                )
-                if prev is None or n_delta + 1 >= compact_every:
-                    # first epoch or compaction: rewrite the base (carrying
-                    # the folded_epoch watermark in the same commit), then
-                    # truncate the changelog to empty with the final schema.
-                    # A crash between the two writes is safe: leftover delta
-                    # rows all have epoch_id <= the new watermark and are
-                    # ignored on the next fold (store_latest_components).
-                    # localCheckpoint breaks the plan's lineage through the
-                    # table being replaced (real Iceberg pins the read
-                    # snapshot; a parquet-backed store would otherwise read
-                    # its own overwrite)
-                    full = full.localCheckpoint(eager=True)
-                    table_store.write(
-                        components_path,
-                        full.withColumn("folded_epoch", epoch_l),
-                    )
-                    table_store.write(
-                        delta_stage,
-                        full.limit(0).withColumn(
-                            "epoch_id", F.lit(0).cast("long")
-                        ),
-                    )
-                else:
-                    table_store.write(
-                        delta_stage,
-                        changed.localCheckpoint(eager=True).withColumn(
-                            "epoch_id", epoch_l
-                        ),
-                        mode="append",
-                    )
-            # pairs append AFTER the component step, so an epoch that fails
-            # there appends nothing and its retry cannot duplicate pairs
-            table_store.write(
-                pairs_path, kept.withColumn("epoch_id", epoch_l), mode="append"
+            delta_stage = f"{components_path}_delta"
+            prev, n_delta = store_latest_components(
+                spark, table_store, components_path
             )
-            table_store.write(store_path, new_sigs, mode="append")
-        finally:
-            # both caches released even when an append throws — foreachBatch
-            # retries in a long-lived session would otherwise accumulate
-            # leaked cached partitions epoch over epoch
-            if kept is not None:
-                kept.unpersist()
-            new_sigs.unpersist()
+            full, changed = connected_components_incremental(
+                prev,
+                kept.select(F.col("key_a").alias("src"), F.col("key_b").alias("dst")),
+            )
+            if prev is None or n_delta + 1 >= compact_every:
+                # first epoch or compaction: rewrite the base (carrying
+                # the folded_epoch watermark in the same commit), then
+                # truncate the changelog to empty with the final schema.
+                # A crash between the two writes is safe: leftover delta
+                # rows all have epoch_id <= the new watermark and are
+                # ignored on the next fold (store_latest_components).
+                # localCheckpoint breaks the plan's lineage through the
+                # table being replaced (real Iceberg pins the read
+                # snapshot; a parquet-backed store would otherwise read
+                # its own overwrite)
+                full = full.localCheckpoint(eager=True)
+                table_store.write(
+                    components_path,
+                    full.withColumn("folded_epoch", epoch_l),
+                )
+                table_store.write(
+                    delta_stage,
+                    full.limit(0).withColumn("epoch_id", F.lit(0).cast("long")),
+                )
+            else:
+                table_store.write(
+                    delta_stage,
+                    changed.localCheckpoint(eager=True).withColumn(
+                        "epoch_id", epoch_l
+                    ),
+                    mode="append",
+                )
+        # pairs append AFTER the component step, so an epoch that fails
+        # there appends nothing and its retry cannot duplicate pairs
+        table_store.write(
+            pairs_path, kept.withColumn("epoch_id", epoch_l), mode="append"
+        )
+        table_store.write(store_path, new_sigs, mode="append")
 
     writer = (
         stream_df.writeStream.foreachBatch(_emit)

@@ -5,6 +5,7 @@ import pytest
 
 from finchspark.operators.cc import connected_components
 from tests.conftest import union_find_components
+from tests.spark_jobs import jobs_run
 
 
 @pytest.mark.parametrize("n,m,seed", [(30, 20, 1), (100, 80, 2), (200, 400, 3), (50, 0, 4)])
@@ -170,6 +171,34 @@ def test_cc_incremental_delta_rows(spark):
     applied = {n: c for n, c in {r["node"]: r["component"] for r in prev.collect()}.items()}
     applied.update({n: c for n, c in got_changed})
     assert {(n, c) for n, c in applied.items()} == got_full
+
+
+def test_cc_incremental_counts_once(spark):
+    """connected_components_incremental counts the projected edges on the
+    job that materializes them, not by a second action, and labels the delta
+    graph without the batch CC re-checkpointing and re-counting it: the call
+    runs only the projection's jobs (7 jobs with the count and the re-count),
+    and the (full, changed) maps are the exact ones."""
+    from finchspark.operators.cc import connected_components_incremental
+
+    prev = spark.createDataFrame(
+        [(1, 1), (2, 1), (3, 1), (10, 10), (11, 10), (20, 20), (21, 20)],
+        "node long, component long",
+    )
+    edges = spark.createDataFrame(
+        [(3, 5), (5, 10), (30, 31)], "src long, dst long"
+    )
+    n_jobs, (full, changed) = jobs_run(
+        spark, lambda: connected_components_incremental(prev, edges)
+    )
+    assert n_jobs <= 4
+    assert {(r["node"], r["component"]) for r in full.collect()} == {
+        (1, 1), (2, 1), (3, 1), (5, 1), (10, 1), (11, 1),
+        (20, 20), (21, 20), (30, 30), (31, 30),
+    }
+    assert {(r["node"], r["component"]) for r in changed.collect()} == {
+        (5, 1), (10, 1), (11, 1), (30, 30), (31, 30)
+    }
 
 
 def test_cc_incremental_delta_broadcast_guard(spark, monkeypatch):

@@ -1,7 +1,5 @@
 """End-to-end near-duplicate pipeline: recall vs brute-force reference,
 cluster assignment parity, checkpoint/resume semantics."""
-import uuid
-
 import numpy as np
 import pytest
 from pyspark.sql import functions as F
@@ -11,6 +9,7 @@ from finchspark.kernels import SketchParams
 from finchspark.plans.checkpoint import ParamsMismatch, TableStore
 from finchspark.plans.pipeline import near_duplicates
 from tests.conftest import brute_force_pairs, union_find_components
+from tests.spark_jobs import jobs_run
 
 THRESH = 0.8
 
@@ -296,21 +295,6 @@ def test_tablestore_write_id_unique_across_resume(spark, cfg, tmp_path):
     assert meta["n_partitions"] == 2
 
 
-def _jobs_run(spark, fn):
-    """(Spark jobs `fn` ran, its result), counted through the status
-    tracker under a job group of its own."""
-    sc = spark.sparkContext
-    group = f"job-count-{uuid.uuid4().hex}"
-    sc.setJobGroup(group, group)
-    try:
-        out = fn()
-    finally:
-        sc.setLocalProperty("spark.jobGroup.id", None)
-    # the status store is fed by the listener bus: drain it before counting
-    sc._jsc.sc().listenerBus().waitUntilEmpty()
-    return len(sc.statusTracker().getJobIdsForGroup(group)), out
-
-
 def test_tablestore_one_job_per_write(spark, cfg, tmp_path):
     """A stage write is one Spark job (the save: the row count is observed
     on it, the per-partition split read from its task metrics) and a stage
@@ -319,14 +303,14 @@ def test_tablestore_one_job_per_write(spark, cfg, tmp_path):
     df = spark.range(1000).repartition(3).persist()
     df.count()
     try:
-        assert _jobs_run(spark, lambda: store.write("s", df))[0] == 1
-        assert _jobs_run(spark, lambda: store.write("s", df, mode="append"))[0] == 1
-        assert _jobs_run(spark, lambda: store.write("t", df, mode="append"))[0] == 1
+        assert jobs_run(spark, lambda: store.write("s", df))[0] == 1
+        assert jobs_run(spark, lambda: store.write("s", df, mode="append"))[0] == 1
+        assert jobs_run(spark, lambda: store.write("t", df, mode="append"))[0] == 1
         meta = store.read_meta("t")
         assert (meta["row_count"], meta["count_source"]) == (1000, "counted")
         assert sorted(meta["partition_rows"].values()) == [333, 333, 334]
-        assert _jobs_run(spark, lambda: store.read("s"))[0] == 0
-        n, got = _jobs_run(spark, lambda: store.get_or_compute("s", lambda: 1 / 0))
+        assert jobs_run(spark, lambda: store.read("s"))[0] == 0
+        n, got = jobs_run(spark, lambda: store.get_or_compute("s", lambda: 1 / 0))
         assert n == 0 and got.columns == ["id"]
         assert store.read_meta("s")["row_count"] == got.count() == 2000
     finally:

@@ -15,6 +15,7 @@ from finchspark.operators.verify import verify_pairs
 from finchspark.plans.checkpoint import TableStore
 from finchspark.sources.synth import synth_documents
 from finchspark.streaming.neardup import neardup_stream, store_latest_components
+from tests.spark_jobs import jobs_per_batch
 
 SCHEMA = "doc_id long, content string"
 
@@ -154,6 +155,24 @@ def test_candidate_pairs_incremental_caps_store_buckets(spark, cfg):
     assert uncapped.count() == 11  # doc 0 paired with every other member
 
 
+def _clustered_stream(spark, cfg, tmp_path, rows, store, compact_every):
+    """Run `rows` as three micro-batches through a stream that maintains a
+    component map, to completion; returns the finished query."""
+    stream = _stream(spark, tmp_path / "incoming", (rows[:11], rows[11:40], rows[40:]))
+    q = neardup_stream(
+        stream,
+        cfg,
+        "signatures",
+        "pairs",
+        str(tmp_path / "ckpt"),
+        components_path="components",
+        compact_every=compact_every,
+        table_store=store,
+    )
+    q.awaitTermination(240)
+    return q
+
+
 @pytest.mark.parametrize(
     "compact_every,layout",
     [
@@ -172,18 +191,7 @@ def test_neardup_stream_continuous_clustering(
     compaction cadence."""
     rows = _synth_rows(36)
     store = TableStore(tmp_path / "store", cfg.params_hash())
-    stream = _stream(spark, tmp_path / "incoming", (rows[:11], rows[11:40], rows[40:]))
-    q = neardup_stream(
-        stream,
-        cfg,
-        "signatures",
-        "pairs",
-        str(tmp_path / "ckpt"),
-        components_path="components",
-        compact_every=compact_every,
-        table_store=store,
-    )
-    q.awaitTermination(240)
+    _clustered_stream(spark, cfg, tmp_path, rows, store, compact_every)
 
     watermark = store.read("components").select(F.max("folded_epoch")).first()[0]
     log_epochs = {
@@ -196,6 +204,23 @@ def test_neardup_stream_continuous_clustering(
 
     want = _batch_components(spark, cfg, rows)
     assert want and got == want
+
+
+def test_neardup_stream_epoch_cost(spark, cfg, tmp_path):
+    """Per-epoch Spark jobs and tasks of the three-epoch clustered stream
+    stay at what one materialization per multiply-read frame costs: the
+    batch's signatures and the kept pairs are each checkpointed once, and
+    the delta graph is counted on its checkpoint job and labelled once.
+    Persisting the two frames instead (built lazily by one job per reader,
+    one Python task per shuffle partition) runs 20/27/34 jobs and 41/60/84
+    tasks."""
+    store = TableStore(tmp_path / "store", cfg.params_hash())
+    q = _clustered_stream(spark, cfg, tmp_path, _synth_rows(36), store, 8)
+    cost = jobs_per_batch(spark, q)
+    assert sorted(cost) == [0, 1, 2]
+    for batch, (budget_jobs, budget_tasks) in enumerate([(15, 15), (19, 23), (26, 46)]):
+        jobs, tasks = cost[batch]
+        assert jobs <= budget_jobs and tasks <= budget_tasks, (batch, cost)
 
 
 def test_neardup_stream_iceberg_store(spark, cfg, tmp_path, monkeypatch):
