@@ -233,10 +233,10 @@ def _q_best_match(spark, sf):
 
 
 def _q_mash_distance(spark, sf):
-    from finchspark.operators.dedup import mash_distance_col
+    from finchspark.functions import mash_distance
 
     return _ngram_pairs(spark, sf).select(
-        "key_a", "key_b", F.round(mash_distance_col("jaccard", K), 9).alias("mash_distance")
+        "key_a", "key_b", F.round(mash_distance(F.col("jaccard"), K), 9).alias("mash_distance")
     )
 
 
@@ -287,7 +287,7 @@ def _q_scaled_signatures(spark, sf):
     distinct k-gram, so sig_size == n_unique == |distinct 21-grams| and the
     retained counts sum back to the total k-mer count — both SQL-expressible.
     Real scales (<1) are murmur-bound and stay on the golden/hypothesis
-    tests (kernels/sketch.py segment_scaled goldens x3)."""
+    tests (the `scaled_*` goldens of kernels/sketch.py scaled_keep)."""
     from finchspark.config import PipelineConfig
     from finchspark.kernels import SketchParams
     from finchspark.operators.signature import build_signatures

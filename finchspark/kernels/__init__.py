@@ -23,12 +23,7 @@ from .shingles import (
     dna_canonical_kmers,
     shingle_hashes,
 )
-from .segment import (
-    segment_bottom_k,
-    segment_count_distinct,
-    segment_scaled,
-    segment_unique_counts,
-)
+from .segment import segment_count_distinct
 from .sketch import (
     FilterParams,
     KmerCounts,
@@ -41,7 +36,6 @@ from .sketch import (
     filter_strands,
     guess_filter_threshold,
     hist_dense,
-    oversketch_size,
     scaled_keep,
     sketch_hashes,
 )
@@ -56,7 +50,7 @@ from .distance import (
     raw_distance_many,
     raw_distance_walk,
 )
-from .simhash import hamming64, simhash64, simhash64_batch, simhash_band_keys
+from .simhash import hamming64, simhash64, simhash64_batch
 from .oph import band_hashes, oph_signatures
 from .suffix import common_spans, lcp_array, span_coverage, suffix_array
 
@@ -69,10 +63,7 @@ __all__ = [
     "shingle_hashes",
     "batch_shingle_hashes",
     "blob_shingle_hashes",
-    "segment_bottom_k",
     "segment_count_distinct",
-    "segment_scaled",
-    "segment_unique_counts",
     "dna_canonical_kmers",
     "SketchParams",
     "FilterParams",
@@ -86,7 +77,6 @@ __all__ = [
     "filter_counts",
     "apply_post_filter",
     "sketch_hashes",
-    "oversketch_size",
     "hist_dense",
     "raw_distance",
     "raw_distance_many",
@@ -99,7 +89,6 @@ __all__ = [
     "cardinality",
     "simhash64",
     "simhash64_batch",
-    "simhash_band_keys",
     "hamming64",
     "oph_signatures",
     "band_hashes",

@@ -1,20 +1,17 @@
-"""Segmented (per-document) sketch kernels over whole Arrow batches.
+"""Segmented (per-document) sketch kernel over whole Arrow batches.
 
-These compute, for EVERY document in a batch at once, the same result as
-`sketch.count_distinct` + `bottom_k` / `scaled_keep` — with one lexsort over
-the batch's entire shingle-hash stream instead of a per-document Python loop.
-This is what keeps the signature UDF O(1) Python ops per Arrow batch
-(north_rule: vectorized pandas/Arrow UDFs, never per-row Python).
-
-Layout convention: a "segmented array" is (values..., offsets) where
-``values[offsets[i]:offsets[i+1]]`` belongs to document i — the exact layout
-of an Arrow ListArray, so results feed `pa.ListArray.from_arrays` zero-copy.
+`segment_count_distinct` computes, for EVERY document in a batch at once,
+the same distinct (hash, count) list as `sketch.count_distinct`, plus each
+hash's rank within its document, with one sort over the batch's entire
+shingle-hash stream instead of a per-document Python loop. The signature
+stage (`operators/signature.py`) applies the bottom-k or scaled keep rule to
+those ranks. This is what keeps the signature UDF O(1) Python ops per Arrow
+batch (north_rule: vectorized pandas/Arrow UDFs, never per-row Python).
 """
 from __future__ import annotations
 
 import numpy as np
 
-U64_MAX = 0xFFFFFFFFFFFFFFFF
 _U32_MAX = np.int64(0xFFFFFFFF)
 
 
@@ -78,48 +75,3 @@ def segment_count_distinct(
     if return_first_idx:
         return gd, gh, counts, rank, order[group_starts]
     return gd, gh, counts, rank
-
-
-def _emit(
-    gd: np.ndarray,
-    gh: np.ndarray,
-    counts: np.ndarray,
-    keep: np.ndarray,
-    n_docs: int,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    kd, kh, kc = gd[keep], gh[keep], counts[keep]
-    per_doc = np.bincount(kd, minlength=n_docs).astype(np.int64)
-    offsets = np.zeros(n_docs + 1, dtype=np.int64)
-    np.cumsum(per_doc, out=offsets[1:])
-    return kh, kc, offsets
-
-
-def segment_bottom_k(
-    doc_idx: np.ndarray, hashes: np.ndarray, n_docs: int, size: int
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Batch form of the Mash bottom-k sketch (`mash.rs:34-63` semantics) for
-    every doc at once. Returns (hashes, counts, offsets) segmented arrays."""
-    gd, gh, counts, rank = segment_count_distinct(doc_idx, hashes, n_docs)
-    return _emit(gd, gh, counts, rank < size, n_docs)
-
-
-def segment_scaled(
-    doc_idx: np.ndarray,
-    hashes: np.ndarray,
-    n_docs: int,
-    size: int,
-    scale: float,
-) -> tuple[np.ndarray, np.ndarray, np.ndarray]:
-    """Batch form of the scaled sketch (`scaled.rs:37-61` semantics)."""
-    gd, gh, counts, rank = segment_count_distinct(doc_idx, hashes, n_docs)
-    max_hash = np.uint64(U64_MAX // int(1.0 / scale))
-    keep = (gh <= max_hash) | (rank < size)
-    return _emit(gd, gh, counts, keep, n_docs)
-
-
-def segment_unique_counts(
-    doc_idx: np.ndarray, hashes: np.ndarray, n_docs: int
-) -> np.ndarray:
-    """Per-document distinct-hash count (pre-sketch), one bincount."""
-    gd, _, _, _ = segment_count_distinct(doc_idx, hashes, n_docs)
-    return np.bincount(gd, minlength=n_docs).astype(np.int64)

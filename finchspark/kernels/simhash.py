@@ -84,17 +84,3 @@ def hamming64(a: np.ndarray, b: np.ndarray) -> np.ndarray:
         total += _POPCOUNT8[(x & np.uint64(0xFF)).astype(np.uint8)]
         x >>= np.uint64(8)
     return total
-
-
-def simhash_band_keys(sims: np.ndarray, n_bands: int = 4) -> np.ndarray:
-    """Split each 64-bit SimHash into `n_bands` equal chunks for banded
-    Hamming-neighbor candidate generation (pigeonhole: any pair within
-    Hamming distance < n_bands shares at least one identical chunk).
-
-    Returns (n_docs, n_bands) uint64 chunk values.
-    """
-    sims = np.asarray(sims, dtype=np.uint64)
-    width = 64 // n_bands
-    mask = np.uint64((1 << width) - 1)
-    shifts = (np.arange(n_bands, dtype=np.uint64) * np.uint64(width))[None, :]
-    return (sims[:, None] >> shifts) & mask

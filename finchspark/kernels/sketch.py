@@ -258,9 +258,3 @@ def sketch_hashes(
         kc = filter_counts(filters, kc)
     kc, _ = apply_post_filter(kc, params)
     return kc
-
-
-def oversketch_size(n_hashes: int, filter_on: bool, oversketch: int = 200) -> int:
-    """CLI over-sketch rule: sketch `n_hashes * oversketch` when filtering is
-    on, else `n_hashes` (`cli/src/cli.rs:287-295`, default 200 at 187-192)."""
-    return n_hashes * oversketch if filter_on else n_hashes

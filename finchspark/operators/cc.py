@@ -8,24 +8,25 @@ DataFrame ops — converges in O(log n) rounds and tolerates high-degree nodes
 to their neighborhood minimum rather than materializing components on one
 reducer.
 
-Scale notes:
+Every call first materializes and counts its edges in one job
+(`_counted`); a graph of at most `SMALL_GRAPH_MAX_EDGES` edge rows is then
+labelled in one task (`_single_task_cc`), a larger one by the star rounds
+(`_star_cc`). `connected_components` and the per-epoch
+`connected_components_incremental` share these three steps.
+
+Scale notes for the star rounds:
 - each round is two star operations (groupBy-min + equi-join on u, both
-  shuffling on u); Spark's partial (map-side) aggregation already bounds the
-  groupBy skew, and AQE skew-join splits the join side of a hub by default;
-- `salt_buckets > 1` adds EXPLICIT hub salting (SURVEY.md §4.3): the
-  neighbor-min is aggregated in two levels — (u, salt=hash(v) % S) then u —
-  and the min-map is replicated S× so the equi-join runs on (u, salt). This
-  bounds any single task to deg(hub)/S rows without relying on AQE, at the
-  cost of an S× blow-up of the (node, min) map — turn it on for graphs with
-  known mega-hubs (it changes no results, property-tested);
-- the convergence check runs every `check_every` rounds, so one driver
-  action (count + order-insensitive edge checksum) covers that many rounds
-  of lazily-chained shuffles — at most check_every-1 extra rounds of work
-  after the fixpoint, against half/third the job-launch latency;
-- iteration state is truncated with localCheckpoint by default; pass
-  `checkpoint_dir` to round-trip state through parquet instead — durable
-  against executor loss on a real cluster (localCheckpoint lineage dies with
-  an executor), and the restart point for a resumed job.
+  shuffling on u). Hub skew rides on Spark itself: partial (map-side)
+  aggregation bounds the groupBy side of a hub, and AQE skew join splits
+  its join side;
+- the convergence check runs every second round, so one driver action
+  (count + order-insensitive edge checksum) covers two rounds of
+  lazily-chained shuffles, at the cost of at most one extra round after the
+  fixpoint;
+- round state is truncated with a lazy localCheckpoint, materialized by the
+  next convergence check;
+- at most `_MAX_ROUNDS` rounds run; a graph that has not converged by then
+  raises instead of returning a partial map.
 """
 from __future__ import annotations
 
@@ -36,6 +37,10 @@ from pyspark.sql import functions as F
 # graphs with at most this many edge rows (4M, about 64 MB of keys: far
 # below executor memory) are labelled in one task by `_single_task_cc`
 SMALL_GRAPH_MAX_EDGES = 1 << 22
+# star rounds `_star_cc` runs at most: they converge in O(log n) rounds
+# (Kiveris et al.), so reaching the bound raises rather than returning a
+# partial map
+_MAX_ROUNDS = 50
 
 
 def cc_labels_numpy(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -90,38 +95,12 @@ def _single_task_cc(edges: DataFrame) -> DataFrame:
     )
 
 
-def _min_map(und: DataFrame, salt_buckets: int) -> DataFrame:
-    """(u, mn = min neighbor of u), optionally via two-level salted agg."""
-    if salt_buckets > 1:
-        part = und.withColumn(
-            "__salt", F.pmod(F.xxhash64("v"), F.lit(salt_buckets))
-        ).groupBy("u", "__salt").agg(F.min("v").alias("mn"))
-        return part.groupBy("u").agg(F.min("mn").alias("mn"))
-    return und.groupBy("u").agg(F.min("v").alias("mn"))
-
-
-def _salted_join(und: DataFrame, m: DataFrame, salt_buckets: int) -> DataFrame:
-    """und ⋈ m on u; with salting, m is replicated across salt buckets so a
-    hub's join rows spread over `salt_buckets` tasks."""
-    if salt_buckets > 1:
-        spark = und.sparkSession
-        salts = spark.range(salt_buckets).select(
-            F.col("id").cast("long").alias("__salt")
-        )
-        m_rep = m.crossJoin(F.broadcast(salts))
-        und_s = und.withColumn(
-            "__salt", F.pmod(F.xxhash64("v"), F.lit(salt_buckets))
-        )
-        return und_s.join(m_rep, ["u", "__salt"]).drop("__salt")
-    return und.join(m, "u")
-
-
-def _large_star(edges: DataFrame, salt_buckets: int = 0) -> DataFrame:
+def _large_star(edges: DataFrame) -> DataFrame:
     """Connect every strictly-larger neighbor of u to min(N(u) ∪ {u})."""
     und = edges.select(
         F.col("src").alias("u"), F.col("dst").alias("v")
     ).union(edges.select(F.col("dst").alias("u"), F.col("src").alias("v")))
-    m = _min_map(und, salt_buckets).select(
+    m = und.groupBy("u").agg(F.min("v").alias("mn")).select(
         "u", F.least("mn", F.col("u")).alias("m")
     )
     # no distinct here: it cost one exchange per round, and the consuming
@@ -129,50 +108,89 @@ def _large_star(edges: DataFrame, salt_buckets: int = 0) -> DataFrame:
     # insensitive (partial agg absorbs dups map-side) and its own output
     # distinct restores canonical form before the convergence check
     return (
-        _salted_join(und, m, salt_buckets)
+        und.join(m, "u")
         .filter(F.col("v") > F.col("u"))
         .select(F.col("v").alias("src"), F.col("m").alias("dst"))
     )
 
 
-def _small_star(edges: DataFrame, salt_buckets: int = 0) -> DataFrame:
+def _small_star(edges: DataFrame) -> DataFrame:
     """Orient edges large→small; connect all smaller neighbors (and self) of
     u to the minimum."""
     oriented = edges.select(
         F.greatest("src", "dst").alias("u"), F.least("src", "dst").alias("v")
     )
-    m = _min_map(oriented, salt_buckets).withColumnRenamed("mn", "m")
-    out = (
-        _salted_join(oriented, m, salt_buckets)
+    m = oriented.groupBy("u").agg(F.min("v").alias("m"))
+    return (
+        oriented.join(m, "u")
         .select(F.col("v").alias("src"), F.col("m").alias("dst"))
         .union(m.select(F.col("u").alias("src"), F.col("m").alias("dst")))
         .distinct()
     )
-    return out
+
+
+def _counted(e: DataFrame) -> tuple[DataFrame, int]:
+    """(`e` materialized, its row count) in ONE job: an eager localCheckpoint
+    carrying an `Observation`, so the labelling reads the materialized blocks
+    instead of re-running the caller's upstream plan, and the count needs no
+    second action."""
+    seen = Observation()
+    e = e.observe(seen, F.count(F.lit(1)).alias("n")).localCheckpoint(eager=True)
+    return e, seen.get["n"]
+
+
+def _star_cc(e: DataFrame) -> DataFrame:
+    """(node, component) of the self-loop-free edges `e` by alternating
+    large-star / small-star rounds, checked for convergence every second
+    round; raises when `_MAX_ROUNDS` rounds do not reach the fixpoint."""
+    prev_sig = None
+    for it in range(_MAX_ROUNDS):
+        # _small_star output is already distinct; the self-loop filter is
+        # narrow — no extra shuffle per round. The lazy checkpoint is
+        # materialized by the next convergence check, in the same job
+        e = _small_star(_large_star(e)).filter(F.col("src") != F.col("dst"))
+        e = e.localCheckpoint(eager=False)
+        if it % 2 == 0:
+            continue
+        # convergence: edge set stable (order-insensitive checksum);
+        # bit_xor is overflow-free under ANSI mode and edges are distinct.
+        # ONE driver action per two rounds; a fixpoint is stable, so
+        # sampling every second round still detects it (≤ 1 extra round)
+        row = e.select(
+            F.count(F.lit(1)).alias("n"),
+            F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("h"),
+        ).first()
+        sig = (row["n"], row["h"])
+        if sig == prev_sig:
+            break
+        prev_sig = sig
+    else:
+        raise RuntimeError(
+            f"connected components: the star rounds did not converge within "
+            f"_MAX_ROUNDS={_MAX_ROUNDS} rounds"
+        )
+    # after convergence edges form stars child -> root(min)
+    comp = e.select(F.col("src").alias("node"), F.col("dst").alias("component"))
+    roots = e.select(F.col("dst").alias("node"), F.col("dst").alias("component"))
+    return comp.union(roots).groupBy("node").agg(
+        F.min("component").alias("component")
+    )
 
 
 def connected_components(
-    edges: DataFrame,
-    src: str = "src",
-    dst: str = "dst",
-    max_iter: int = 50,
-    check_every: int = 2,
-    salt_buckets: int = 0,
-    checkpoint_dir: str | None = None,
-    small_graph_threshold: int | None = SMALL_GRAPH_MAX_EDGES,
+    edges: DataFrame, small_graph_threshold: int = SMALL_GRAPH_MAX_EDGES
 ) -> DataFrame:
     """Return (node, component) where component = min node id reachable.
 
-    `edges` must have two numeric/orderable columns; self-loops and
+    `edges` must have two orderable columns `src` and `dst`; self-loops and
     duplicates are tolerated. Empty edge input returns an empty frame.
 
-    Graphs with at most `small_graph_threshold` edge rows (default
-    `SMALL_GRAPH_MAX_EDGES`) skip the star rounds and are
-    labeled in ONE single-task job: a near-dup edge list is tiny relative to
-    the corpus, and the iterative path costs O(log n) shuffle rounds of job
-    latency even on 25 edges. The edge count that guards this reuses the
-    same materialization the star loop needs, so the big-graph case pays
-    nothing extra. Pass 0/None to force the distributed star path.
+    The self-loop-free edges are materialized and counted in one job
+    (`_counted`). Graphs with at most `small_graph_threshold` edge rows are
+    then labelled in ONE single-task job (`_single_task_cc`): a near-dup edge
+    list is tiny relative to the corpus, and the star rounds cost O(log n)
+    shuffle rounds of job latency even on 25 edges. Larger graphs go through
+    the star rounds (`_star_cc`); a threshold of 0 pins that path.
 
     No up-front `.distinct()`: it cost a full edge exchange before any work,
     while duplicate edges are absorbed for free one step later — the numpy
@@ -181,70 +199,8 @@ def connected_components(
     single-task guard bound what is actually SHIPPED to the one task, which
     is the quantity the guard protects.
     """
-    spark = edges.sparkSession
-    e = edges.select(F.col(src).alias("src"), F.col(dst).alias("dst")).filter(
-        F.col("src") != F.col("dst")
-    )
-    guarded = False
-    if small_graph_threshold and checkpoint_dir is None:
-        e = e.localCheckpoint(eager=False)
-        guarded = True
-        if e.count() <= small_graph_threshold:  # materializes the checkpoint
-            return _single_task_cc(e)
-
-    written: list[str] = []
-
-    def _truncate(df: DataFrame, it: int, durable: bool) -> DataFrame:
-        # durable parquet only on convergence-check rounds: writing every
-        # round would launch one full job per round and void the
-        # check_every batching of driver actions; skipped rounds stay lazy
-        if checkpoint_dir is not None and durable:
-            path = f"{checkpoint_dir}/cc_iter_{it:04d}"
-            df.write.mode("overwrite").parquet(path)
-            written.append(path)
-            return spark.read.parquet(path)
-        # lazy: materialized by the convergence action in the same job
-        return df.localCheckpoint(eager=False)
-
-    if checkpoint_dir is not None:
-        e = _truncate(e, -1, durable=True)
-    elif not guarded:
-        e = e.localCheckpoint(eager=False)
-    prev_sig = None
-    for it in range(max_iter):
-        is_check = not ((it + 1) % check_every) or it + 1 >= max_iter
-        # _small_star output is already distinct; the self-loop filter is
-        # narrow — no extra shuffle per iteration
-        e = _small_star(_large_star(e, salt_buckets), salt_buckets)
-        e = e.filter(F.col("src") != F.col("dst"))
-        e = _truncate(e, it, durable=is_check)
-        if not is_check:
-            continue
-        # convergence: edge set stable (order-insensitive checksum);
-        # bit_xor is overflow-free under ANSI mode and edges are distinct.
-        # ONE driver action per `check_every` rounds; a fixpoint is stable,
-        # so sampling every k-th round still detects it (≤ k-1 extra rounds)
-        sig = e.select(
-            F.count(F.lit(1)).alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("h"),
-        ).first()
-        if prev_sig == (sig["n"], sig["h"]):
-            break
-        prev_sig = (sig["n"], sig["h"])
-    # drop superseded iteration checkpoints — only the converged state (the
-    # lineage root of the returned frame) stays on disk as the resume point
-    if len(written) > 1:
-        jvm = spark._jvm
-        hconf = spark._jsc.hadoopConfiguration()
-        for p in written[:-1]:
-            jp = jvm.org.apache.hadoop.fs.Path(p)
-            jp.getFileSystem(hconf).delete(jp, True)
-    # after convergence edges form stars child -> root(min)
-    comp = e.select(F.col("src").alias("node"), F.col("dst").alias("component"))
-    roots = e.select(F.col("dst").alias("node"), F.col("dst").alias("component"))
-    return comp.union(roots).groupBy("node").agg(
-        F.min("component").alias("component")
-    )
+    e, n = _counted(edges.select("src", "dst").filter(F.col("src") != F.col("dst")))
+    return _single_task_cc(e) if n <= small_graph_threshold else _star_cc(e)
 
 
 # broadcast the remap only when the epoch's projected edge count bounds it
@@ -292,10 +248,8 @@ def connected_components_incremental(
     executors, so it is broadcast only when the projected edge count is at
     most `_BROADCAST_REMAP_MAX_EDGES`.
 
-    Driver actions: the projected edges are materialized and counted once,
-    by an eager localCheckpoint carrying an `Observation`, so the delta CC
-    reads the materialized blocks instead of re-running the caller's
-    upstream plan. The delta labels are checkpointed lazily: the first job
+    Driver actions: the projected edges are materialized and counted in one
+    job (`_counted`). The delta labels are checkpointed lazily: the first job
     that reads them (for the remap or the new-node anti-join) labels the
     delta graph, and the other reader reads the same blocks.
     """
@@ -315,15 +269,9 @@ def connected_components_incremental(
         )
         .filter(F.col("src") != F.col("dst"))
     )
-    seen = Observation()
-    proj = proj.observe(seen, F.count(F.lit(1)).alias("n")).localCheckpoint(
-        eager=True
-    )
-    n_proj = seen.get["n"]
+    proj, n_proj = _counted(proj)
     delta = (
-        _single_task_cc(proj)
-        if n_proj <= SMALL_GRAPH_MAX_EDGES
-        else connected_components(proj, small_graph_threshold=None)
+        _single_task_cc(proj) if n_proj <= SMALL_GRAPH_MAX_EDGES else _star_cc(proj)
     ).localCheckpoint(eager=False)
     # remap previous components whose representative was merged
     remap = delta.select(

@@ -142,16 +142,6 @@ def max_dist_filter(pairs: DataFrame, max_dist: float, col: str = "mash_distance
     return pairs.filter(F.col(col) <= max_dist)
 
 
-def mash_distance_col(jaccard_col: str, k: int):
-    """D2 as a column expression: -ln(2j/(1+j))/k clamped to [0,1]
-    (`lib/src/distance.rs:37-41`)."""
-    j = F.col(jaccard_col)
-    d = -F.log((2.0 * j) / (1.0 + j)) / F.lit(float(k))
-    return F.when(j <= 0.0, F.lit(1.0)).otherwise(
-        F.least(F.lit(1.0), F.greatest(F.lit(0.0), d))
-    )
-
-
 def dedup_corpus(
     docs: DataFrame,
     components: DataFrame,

@@ -9,7 +9,8 @@ over Arrow list columns via `raw_distance_many` — one radix sort + a few
 bincounts for the WHOLE batch, zero per-pair Python.
 
 mash_distance = -ln(2j/(1+j))/k clamped to [0,1] (`distance.rs:37-41`) is a
-plain column expression — it stays in whole-stage codegen.
+plain column expression (`functions.mash_distance`) — it stays in whole-stage
+codegen.
 """
 from __future__ import annotations
 
@@ -20,6 +21,7 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from ..config import PipelineConfig
+from ..functions import mash_distance
 from ..kernels import i64_to_u64_shifted
 from ..kernels.distance import raw_distance_many
 
@@ -125,12 +127,7 @@ def verify_pairs(
             )
 
     verified = joined.mapInArrow(compute, out_schema)
-    # column expression (whole-stage codegen): mash distance + clamp
-    mash = -F.log((2.0 * F.col("jaccard")) / (1.0 + F.col("jaccard"))) / F.lit(k)
-    mash = F.when(F.col("jaccard") <= 0.0, F.lit(1.0)).otherwise(
-        F.least(F.lit(1.0), F.greatest(F.lit(0.0), mash))
-    )
-    out = verified.withColumn("mash_distance", mash)
+    out = verified.withColumn("mash_distance", mash_distance(F.col("jaccard"), k))
     if config.max_dist is not None:
         out = out.filter(F.col("mash_distance") <= config.max_dist)  # F8
     return out

@@ -40,20 +40,16 @@ def test_cc_chain_and_star(spark):
     assert len(got) == 64
 
 
-@pytest.mark.parametrize("salt_buckets,check_every", [(4, 1), (8, 2), (0, 3)])
-def test_cc_salting_and_check_interval_equivalence(spark, salt_buckets, check_every):
-    """Hub salting and a sparser convergence check change the plan, never the
-    result — exercised on a star graph (worst-case hub) + a chain tail."""
+def test_cc_star_path_hub_and_chain(spark):
+    """The star rounds label a star graph (worst-case hub) plus a chain tail
+    exactly: the hub's skew rides on partial aggregation and AQE skew join."""
     star = [(0, i) for i in range(1, 40)]
     chain = [(100 + i, 101 + i) for i in range(10)]
     edges = star + chain
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {
         r["node"]: r["component"]
-        for r in connected_components(
-            df, salt_buckets=salt_buckets, check_every=check_every,
-            small_graph_threshold=0
-        ).collect()
+        for r in connected_components(df, small_graph_threshold=0).collect()
     }
     expect = union_find_components(200, edges)
     nodes = {x for e in edges for x in e}
@@ -61,43 +57,35 @@ def test_cc_salting_and_check_interval_equivalence(spark, salt_buckets, check_ev
         assert got[u] == expect[u]
 
 
-def test_cc_durable_checkpoint(spark, tmp_path):
-    edges = [(i, i + 1) for i in range(20)] + [(50, 51), (51, 52)]
-    df = spark.createDataFrame(edges, "src long, dst long")
-    got = {
-        r["node"]: r["component"]
-        for r in connected_components(
-            df, checkpoint_dir=str(tmp_path / "cc_state")
-        ).collect()
-    }
-    expect = union_find_components(60, edges)
-    for u in {x for e in edges for x in e}:
-        assert got[u] == expect[u]
-    # durable state actually landed on disk
-    assert any((tmp_path / "cc_state").glob("cc_iter_*"))
+def test_cc_star_round_bound_raises(spark, monkeypatch):
+    """A star path that reaches `_MAX_ROUNDS` without converging raises and
+    names the bound instead of returning a partial map (with two rounds the
+    64-node chain would come back as 60 components)."""
+    from finchspark.operators import cc
+
+    chain = [(i, i + 1) for i in range(63)]
+    df = spark.createDataFrame(chain, "src long, dst long")
+    monkeypatch.setattr(cc, "_MAX_ROUNDS", 2)
+    with pytest.raises(RuntimeError, match="_MAX_ROUNDS=2"):
+        cc.connected_components(df, small_graph_threshold=0)
 
 
-def test_cc_durable_checkpoint_writes_only_check_rounds(spark, tmp_path):
-    """Durable state is written only on convergence-check rounds (else the
-    check_every batching of driver actions buys nothing), and superseded
-    cc_iter_* directories are deleted after convergence — only the converged
-    resume point (the lineage root of the returned frame) remains."""
-    edges = [(i, i + 1) for i in range(30)]
+def test_cc_default_path_jobs(spark):
+    """A default-path call counts its edges on the job that materializes
+    them and labels them in one more: two jobs, collect included, with the
+    exact map."""
+    edges = [(i, i + 1) for i in range(20)] + [(50, 51), (51, 52), (52, 52)]
     df = spark.createDataFrame(edges, "src long, dst long")
-    out = connected_components(
-        df, checkpoint_dir=str(tmp_path / "cc_state"), check_every=3
+    n_jobs, got = jobs_run(
+        spark,
+        lambda: {
+            (r["node"], r["component"])
+            for r in connected_components(df).collect()
+        },
     )
-    remaining = sorted((tmp_path / "cc_state").glob("cc_iter_*"))
-    assert len(remaining) == 1
-    # the returned frame stays readable after cleanup (lineage -> last dir)
-    got = {r["node"]: r["component"] for r in out.collect()}
-    expect = union_find_components(31, edges)
-    for u in range(31):
-        assert got[u] == expect[u]
-    # the surviving directory is a check-round iteration (durable writes on
-    # check rounds only: iterations 2, 5, 8... for check_every=3)
-    it = int(remaining[0].name.split("_")[-1])
-    assert (it + 1) % 3 == 0 or it == -1
+    assert n_jobs <= 2
+    expect = union_find_components(60, edges)
+    assert got == {(u, expect[u]) for e in edges for u in e}
 
 
 def test_cc_numpy_labels_vs_union_find():
