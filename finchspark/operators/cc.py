@@ -19,10 +19,10 @@ Scale notes for the star rounds:
   shuffling on u). Hub skew rides on Spark itself: partial (map-side)
   aggregation bounds the groupBy side of a hub, and AQE skew join splits
   its join side;
-- the convergence check runs every second round, so one driver action
-  (count + order-insensitive edge checksum) covers two rounds of
-  lazily-chained shuffles, at the cost of at most one extra round after the
-  fixpoint;
+- the convergence check runs every `_CHECK_EVERY` (2) rounds, so one
+  driver action (count + order-insensitive edge checksum) covers two rounds
+  of lazily-chained shuffles, at the cost of at most one extra round after
+  the fixpoint;
 - round state is truncated with a lazy localCheckpoint, materialized by the
   next convergence check;
 - at most `_MAX_ROUNDS` rounds run; a graph that has not converged by then
@@ -41,6 +41,8 @@ SMALL_GRAPH_MAX_EDGES = 1 << 22
 # (Kiveris et al.), so reaching the bound raises rather than returning a
 # partial map
 _MAX_ROUNDS = 50
+# star rounds per convergence check (one driver action each)
+_CHECK_EVERY = 2
 
 
 def cc_labels_numpy(src: np.ndarray, dst: np.ndarray) -> tuple[np.ndarray, np.ndarray]:
@@ -141,8 +143,9 @@ def _counted(e: DataFrame) -> tuple[DataFrame, int]:
 
 def _star_cc(e: DataFrame) -> DataFrame:
     """(node, component) of the self-loop-free edges `e` by alternating
-    large-star / small-star rounds, checked for convergence every second
-    round; raises when `_MAX_ROUNDS` rounds do not reach the fixpoint."""
+    large-star / small-star rounds, checked for convergence every
+    `_CHECK_EVERY` rounds; raises when `_MAX_ROUNDS` rounds do not reach
+    the fixpoint."""
     prev_sig = None
     for it in range(_MAX_ROUNDS):
         # _small_star output is already distinct; the self-loop filter is
@@ -150,12 +153,12 @@ def _star_cc(e: DataFrame) -> DataFrame:
         # materialized by the next convergence check, in the same job
         e = _small_star(_large_star(e)).filter(F.col("src") != F.col("dst"))
         e = e.localCheckpoint(eager=False)
-        if it % 2 == 0:
+        if (it + 1) % _CHECK_EVERY:
             continue
         # convergence: edge set stable (order-insensitive checksum);
         # bit_xor is overflow-free under ANSI mode and edges are distinct.
-        # ONE driver action per two rounds; a fixpoint is stable, so
-        # sampling every second round still detects it (≤ 1 extra round)
+        # ONE driver action per `_CHECK_EVERY` rounds; a fixpoint is
+        # stable, so sampling the rounds still detects it
         row = e.select(
             F.count(F.lit(1)).alias("n"),
             F.coalesce(F.bit_xor(F.xxhash64("src", "dst")), F.lit(0)).alias("h"),

@@ -28,6 +28,7 @@ import time
 import uuid
 from pathlib import Path
 
+from py4j.protocol import Py4JJavaError
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
@@ -241,8 +242,9 @@ def _partition_rows(sc, tag: str, expected: int, wait_s: float) -> dict[int, int
     """{partition id: rows written} over the successful tasks of the jobs
     tagged `tag`, from their output metrics in Spark's status store; only
     partitions that wrote rows are listed. The listener bus feeds the store
-    asynchronously, so this re-reads it until the split sums to `expected`
-    (the save's observed count) and raises if that takes over `wait_s`."""
+    asynchronously (a job can be listed before its stages are), so this
+    re-reads it until the split sums to `expected` (the save's observed
+    count) and raises if that takes over `wait_s`."""
     jsc = sc._jsc.sc()
     status = jsc.statusStore()
     deadline = time.monotonic() + wait_s
@@ -252,7 +254,14 @@ def _partition_rows(sc, tag: str, expected: int, wait_s: float) -> dict[int, int
             stages = status.job(job).stageIds()
             for i in range(stages.size()):
                 stage = stages.apply(i)
-                for attempt in range(status.lastStageAttempt(stage).attemptId() + 1):
+                try:
+                    last = status.lastStageAttempt(stage).attemptId()
+                except Py4JJavaError as e:
+                    # not in the store yet (or a skipped stage it evicted)
+                    if "NoSuchElementException" not in str(e.java_exception):
+                        raise
+                    continue
+                for attempt in range(last + 1):
                     tasks = status.taskList(stage, attempt, 2**31 - 1).iterator()
                     while tasks.hasNext():
                         t = tasks.next()

@@ -40,19 +40,30 @@ def test_cc_chain_and_star(spark):
     assert len(got) == 64
 
 
-def test_cc_star_path_hub_and_chain(spark):
-    """The star rounds label a star graph (worst-case hub) plus a chain tail
-    exactly: the hub's skew rides on partial aggregation and AQE skew join."""
-    star = [(0, i) for i in range(1, 40)]
+@pytest.mark.parametrize("hub,check_every", [(4, 1), (8, 2), (0, 3)])
+def test_cc_salting_and_check_interval_equivalence(
+    spark, monkeypatch, hub, check_every
+):
+    """Hub skew and the convergence-check interval change the plan, never the
+    result: the star rounds label a star graph (worst-case hub, which rides
+    on partial aggregation and AQE skew join) plus a chain tail exactly,
+    whether the hub is its component's minimum (0) or a node whose smaller
+    leaves relabel it (4, 8), and whether `_CHECK_EVERY` samples every
+    round, every second or every third."""
+    from finchspark.operators import cc
+
+    monkeypatch.setattr(cc, "_CHECK_EVERY", check_every)
+    star = [(hub, i) for i in range(40) if i != hub]
     chain = [(100 + i, 101 + i) for i in range(10)]
     edges = star + chain
     df = spark.createDataFrame(edges, "src long, dst long")
     got = {
         r["node"]: r["component"]
-        for r in connected_components(df, small_graph_threshold=0).collect()
+        for r in cc.connected_components(df, small_graph_threshold=0).collect()
     }
     expect = union_find_components(200, edges)
     nodes = {x for e in edges for x in e}
+    assert set(got) == nodes
     for u in nodes:
         assert got[u] == expect[u]
 
